@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.Trace
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds at
@@ -37,37 +37,27 @@ import org.apache.spark.sql.SparkSession
   *     shows whether the reference bound was actually active.
   *  2. TELEMETRY — per query: GC milliseconds (MXBean delta; in
   *     local mode the driver JVM IS the cluster, so this is exact and
-  *     unaffected by listener lag), task spill bytes (listener sum) and
-  *     the storage-memory high-water mark (sampled at task end). A 72 s
+  *     unaffected by listener lag), task spill bytes and the
+  *     storage-memory high-water mark (sampled at task end). A 72 s
   *     artifact with gc_ms ≈ 60000 reads "weather"; one with flat GC and
-  *     a spill spike reads "plan regression". Spill/storage are read
-  *     AFTER the post-query cache clear + explicit GC, so the async
-  *     listener bus has had tens of milliseconds to drain the query's
-  *     tail onTaskEnd events; a straggler event can still slip to the
-  *     next query's window, so spill_mb/storage_mb_hwm are
-  *     approximately-per-query (gc_ms is exact).
+  *     a spill spike reads "plan regression". Every timed run carries
+  *     its own job tag and spill/storage come from that tag's
+  *     [[graft.obs.Trace]] totals: attributed to the query whose jobs
+  *     produced them, not to whatever ran in its time window.
   *
   * SPARK_GRAFT_STORAGE_FRACTION squeezes spark.memory.storageFraction —
   * the knob the q59 cache-sensitivity check runs under. */
 object Bench {
   private val Reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
 
-  /** Spill + storage-HWM accumulator; GC is read from MXBeans instead
-    * (exact at query boundaries even if the listener bus lags a task). */
-  private final class Telemetry(sc: org.apache.spark.SparkContext)
-      extends SparkListener {
-    @volatile var spillBytes = 0L
-    @volatile var storageHwm = 0L
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null)
-        spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
-      // storage in use across block managers (local mode: one entry)
-      val used = sc.getExecutorMemoryStatus.valuesIterator
-        .map { case (max, remaining) => max - remaining }.sum
-      if (used > storageHwm) storageHwm = used
-    }
-    def reset(): Unit = { spillBytes = 0L; storageHwm = 0L }
+  /** One query's telemetry over its runs: GC and spill add up, storage
+    * keeps the high-water mark. */
+  private final case class Tel(gcMs: Long, spillBytes: Long,
+      storageHwm: Long) {
+    def +(o: Tel): Tel = Tel(gcMs + o.gcMs, spillBytes + o.spillBytes,
+      math.max(storageHwm, o.storageHwm))
+    def json: String = s"""{"gc_ms":$gcMs,"spill_mb":${spillBytes /
+      1048576},"storage_mb_hwm":${storageHwm / 1048576}}"""
   }
 
   private def gcMillis(): Long = {
@@ -91,19 +81,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val storageFraction =
       sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.5")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.memory.storageFraction", storageFraction)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val telemetry = new Telemetry(spark.sparkContext)
-    spark.sparkContext.addSparkListener(telemetry)
+    val spark = Session.local(Session.cpus,
+      Map("spark.memory.storageFraction" -> storageFraction))
+    val trace = Trace.attach(spark)
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
       "tools/bench_ref.json")
     val ref = loadRef(refPath)
@@ -124,42 +106,38 @@ object Bench {
     // voted out by the median instead of doubling one query's number.
     val samples = scala.collection.mutable.Map
       .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    val gcMs = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
-    val spillB = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
-    val storB = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
+    val tel = scala.collection.mutable.Map
+      .empty[String, Tel].withDefaultValue(Tel(0L, 0L, 0L))
     val failed = scala.collection.mutable.Map.empty[String, String]
     // wall time over ALL reps (successful or not) — the denominator the
-    // GC-fraction trigger needs, since gcMs also accumulates over all
+    // GC-fraction trigger needs, since GC also accumulates over all
     // reps (samples.sum would cover successful reps only and inflate
     // the fraction when reps fail)
     val wallSec = scala.collection.mutable.Map
       .empty[String, Double].withDefaultValue(0.0)
+    var runs = 0
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        gcSink: scala.collection.mutable.Map[String, Long],
-        spillSink: scala.collection.mutable.Map[String, Long],
-        storSink: scala.collection.mutable.Map[String, Long],
+        telSink: scala.collection.mutable.Map[String, Tel],
         failSink: scala.collection.mutable.Map[String, String])
         : Option[Double] = {
-      telemetry.reset()
+      runs += 1
+      val tag = s"bench-$runs-$name"
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       // A failed rep is an ERROR, not a (fast) timing: recording it
       // would fabricate a phantom speedup (r6: q16/q43/q46 "0.1 s"
       // were analysis failures). Keep the sample only on success.
       val ok =
-        try { fn(spark, sfDir).count(); true }
+        try { trace.run(tag)(fn(spark, sfDir).count()); true }
         catch { case e: Throwable =>
           failSink(name) = Option(e.getMessage)
             .getOrElse(e.getClass.getName).take(200)
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      if (gcSink eq gcMs) wallSec(name) = wallSec(name) + sec
-      gcSink(name) = gcSink(name) + (gcMillis() - gc0)
+      if (telSink eq tel) wallSec(name) = wallSec(name) + sec
+      val gcMs = gcMillis() - gc0
       // Queries are independent pipelines: drop any frame a query
       // persisted for its own internal reuse (poobah, jaccardDedup
       // return persisted results by contract). Without this the
@@ -178,17 +156,14 @@ object Bench {
       // run). One explicit GC at the query boundary keeps the stalls
       // out of the timed windows; it is not counted in any sample.
       System.gc()
-      // Listener-derived telemetry is read AFTER the cleanup above: the
-      // cache clear + full GC give the async bus tens of milliseconds
-      // to deliver this query's tail onTaskEnd events (see scaladoc —
-      // still approximate, unlike the MXBean GC delta).
-      spillSink(name) = spillSink(name) + telemetry.spillBytes
-      storSink(name) = math.max(storSink(name), telemetry.storageHwm)
+      val stats = trace.drain(tag)
+      telSink(name) = telSink(name) +
+        Tel(gcMs, stats.spillBytes, stats.storageHwmBytes)
       if (ok) Some(sec) else None
     }
     (1 to Reps).foreach { _ =>
       ordered.foreach { case (name, fn) =>
-        timeOne(name, fn, gcMs, spillB, storB, failed)
+        timeOne(name, fn, tel, failed)
           .foreach(s => samples(name) = samples(name) :+ s)
       }
     }
@@ -204,20 +179,16 @@ object Bench {
     // exoneration. Re-run telemetry/failures go to separate outlier_*
     // sinks — the rep-window numbers stay untouched.
     val outliers = scala.collection.mutable.Map.empty[String, Double]
-    val outGc = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
-    val outSpill = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
-    val outStor = scala.collection.mutable.Map
-      .empty[String, Long].withDefaultValue(0L)
+    val outTel = scala.collection.mutable.Map
+      .empty[String, Tel].withDefaultValue(Tel(0L, 0L, 0L))
     val outFailed = scala.collection.mutable.Map.empty[String, String]
     timed.foreach { case (name, fn) =>
       val med0 = median(samples(name))
       val vsSelf = med0 > 3.0 * samples(name).min
       val vsRef = ref.get(name).exists(r => med0 > 2.0 * r)
-      val gcHeavy = gcMs(name) > 0.2 * wallSec(name) * 1000.0
+      val gcHeavy = tel(name).gcMs > 0.2 * wallSec(name) * 1000.0
       if (vsSelf || vsRef || gcHeavy)
-        timeOne(name, fn, outGc, outSpill, outStor, outFailed)
+        timeOne(name, fn, outTel, outFailed)
           .foreach(s => outliers(name) = s)
     }
     val med = timed.map { case (name, _) => name -> median(samples(name)) }
@@ -233,22 +204,14 @@ object Bench {
         .map { case (k, v) => jstr(k) + ":" + jstr(v) }
         .mkString("{", ",", "}")
     def jtel(names: Seq[String],
-        gc: scala.collection.mutable.Map[String, Long],
-        sp: scala.collection.mutable.Map[String, Long],
-        st: scala.collection.mutable.Map[String, Long]): String =
-      names.map { name =>
-        jstr(name) + ":{\"gc_ms\":" + gc(name) +
-          ",\"spill_mb\":" + (sp(name) / 1048576) +
-          ",\"storage_mb_hwm\":" + (st(name) / 1048576) + "}"
-      }.mkString("{", ",", "}")
+        sink: scala.collection.mutable.Map[String, Tel]): String =
+      names.map(n => jstr(n) + ":" + sink(n).json).mkString("{", ",", "}")
     val outlierJson = jmap(outliers.toSeq.sortBy(_._1))
-    val telemetryJson =
-      jtel(timed.map(_._1), gcMs, spillB, storB)
+    val telemetryJson = jtel(timed.map(_._1), tel)
     // union with outFailed: a FAILED re-run's telemetry is exactly what
     // explains the failure — it must not vanish from the artifact
     val outlierTelJson =
-      jtel((outliers.keys ++ outFailed.keys).toSeq.distinct.sorted,
-        outGc, outSpill, outStor)
+      jtel((outliers.keys ++ outFailed.keys).toSeq.distinct.sorted, outTel)
     // registered queries with no reference entry run without the 2x
     // vsRef bound — surface them so the artifact shows the gap
     val refMissing = timed.map(_._1).filterNot(ref.contains).sorted

@@ -6,6 +6,13 @@ import org.apache.spark.sql.functions._
 /** Shared helpers for the single-run benchmark mains. */
 object BenchUtil {
 
+  /** `f`'s result and its wall seconds. */
+  def timeIt[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = f
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** Untimed session warmup: the first Spark job of a session pays JVM
     * classloading + whole-stage-codegen compilation (~5 s at
     * local[32]) that would otherwise be charged entirely to whichever

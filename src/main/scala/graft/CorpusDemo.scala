@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end user journey over the TRAINING-DATA surface — the flow a
@@ -18,15 +17,8 @@ object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val out = if (args.length > 0) args(0) else "/tmp/graft_corpus"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$out/warehouse")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus,
+      Map("spark.sql.warehouse.dir" -> s"$out/warehouse"))
     import spark.implicits._
 
     val docs = Q.t(spark, sfDir, "documents")

@@ -38,12 +38,6 @@ object DedupSkewBench {
 
   private val NDocs = 500000L
 
-  private def timeIt[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   private def words(seed: Int, n: Int) = concat_ws(" ",
     (0 until n).map(j =>
       concat(lit("w"), pmod(xxhash64(col("_pk"), lit(seed), lit(j)),
@@ -76,19 +70,19 @@ object DedupSkewBench {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     docs.count()
     try {
-      val (nExact, tExact) = timeIt {
+      val (nExact, tExact) = BenchUtil.timeIt {
         docs.groupBy(graft.functions.Expressions.polyHash64(col("text"))
             .as("fp"))
           .agg(count(lit(1)).as("n")).filter(col("n") >= 2).count()
       }
-      val (nPairs, tJac) = timeIt {
+      val (nPairs, tJac) = BenchUtil.timeIt {
         val pairs = operators.Dedup.jaccardDedup(docs, "doc_id", "text",
           k = 3, threshold = 0.4)
         val n = pairs.count()
         pairs.unpersist()
         n
       }
-      val (nLines, tLines) = timeIt {
+      val (nLines, tLines) = BenchUtil.timeIt {
         operators.Dedup.dedupLines(docs, "doc_id", "text")
           .filter(col("n_dropped") > 0).count()
       }
@@ -97,14 +91,14 @@ object DedupSkewBench {
       // expands the 150k-doc boilerplate shingles into ~10^10 pairs.
       // The derivation cost is charged to the stage (that's the real
       // production sequence).
-      val ((cap, nContain), tContain) = timeIt {
+      val ((cap, nContain), tContain) = BenchUtil.timeIt {
         val c = operators.Dedup.derivedDfCap(docs, "text", k = 3)
         (c, operators.Dedup.containmentPairs(docs, "doc_id", "text",
           k = 3, threshold = 0.5, dfCap = Some(c)).count())
       }
       // k=4 keeps three shingles of the 6-word hot line fully inside it
       // (hot h keys), while the planted full-text dups repeat all theirs
-      val (nSpans, tSpans) = timeIt {
+      val (nSpans, tSpans) = BenchUtil.timeIt {
         operators.Dedup.repeatedSpans(docs, "doc_id", "text", k = 4)
           .count()
       }
@@ -114,14 +108,7 @@ object DedupSkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // warm-up pass (codegen + JIT for every stage shape), then timed
     runStages(spark, skewed = false)

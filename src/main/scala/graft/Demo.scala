@@ -8,7 +8,6 @@ import graft.dm.Dm
 import graft.io.{Idat, SampleSheet, Store}
 import graft.prep.Prep
 import graft.qc.QC
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end user journey over the library's public surface — the flow a
@@ -50,12 +49,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft_demo")
     new java.io.File(workDir).mkdirs()
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(8)
     import spark.implicits._
 
     // ---- synthetic mini-array: 400 probes, 4 samples (2 groups) ----

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Domain-pipeline benchmark against BASELINE.md's reference-derived
@@ -22,21 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object DomainBench {
 
-  private def timeIt[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     import spark.implicits._
 
     val nProbes = 937688L // EPICv2 signal rows/sample
@@ -83,7 +70,7 @@ object DomainBench {
     val probesForMerge = ranges.select(
       col("chromosome").as("chrom"), col("start"), col("end"),
       col("probe_id"))
-    val ((tiles, mergedBins, merged), tMerge) = timeIt {
+    val ((tiles, mergedBins, merged), tMerge) = BenchUtil.timeIt {
       // cache the 57k-row tile table: it is consumed twice (the census
       // count and the merge), and its lineage is a join+window pipeline
       // worth ~1.5 s per evaluation — exactly what a production run
@@ -95,14 +82,14 @@ object DomainBench {
     }
 
     // --- stage 2: per-bin medians + CBS (ref: ~15 s at shuffles=10000) ---
-    val (nSegs, tCbs) = timeIt {
+    val (nSegs, tCbs) = BenchUtil.timeIt {
       val med = graft.cnv.Cnv.binMedians(cnv, ranges, mergedBins)
       graft.cnv.Cnv.segment(spark, med, shuffles = 10000,
         pThreshold = 1e-4).count()
     }
 
     // --- stage 3: DMR Stouffer combine over 0.5M segments (ref: minutes) ---
-    val (nDmr, tStouffer) = timeIt {
+    val (nDmr, tStouffer) = BenchUtil.timeIt {
       spark.range(2000000L)
         .select((col("id") / 4).cast("long").as("segment_id"),
           ((pmod(col("id") * 2654435761L, lit(999999L)) + 1) / 1000000.0)

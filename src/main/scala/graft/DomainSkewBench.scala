@@ -28,12 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object DomainSkewBench {
 
-  private def timeIt[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   private val NChrom = 24
   private val Total = 9376880L // 10× EPICv2
 
@@ -86,7 +80,7 @@ object DomainSkewBench {
     val probesForMerge = ranges.select(
       col("chromosome").as("chrom"), col("start"), col("end"),
       col("probe_id"))
-    val ((nBins, _), tMerge) = timeIt {
+    val ((nBins, _), tMerge) = BenchUtil.timeIt {
       val t = graft.cnv.Cnv.gapAwareTiles(seqLengths, gaps)
       val m = graft.cnv.Cnv.mergeBinsToMinimumOverlap(spark, t,
         probesForMerge, minOverlap = 20)
@@ -104,7 +98,7 @@ object DomainSkewBench {
         .as("grp_p_value"),
       (pmod(xxhash64(col("probe_id"), lit(7)), lit(200L)) / 100.0 - 1.0)
         .as("grp_estimate"))
-    val (nSegs, tDmr) = timeIt {
+    val (nSegs, tDmr) = BenchUtil.timeIt {
       graft.dm.Dm.computeDmr(betas, dmp, ranges, Seq("grp"),
         distCutoff = Some(0.3)).count()
     }
@@ -112,14 +106,7 @@ object DomainSkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // the first-slot shape would otherwise absorb all first-job
     // classloading + codegen, skewing the very ratio reported here

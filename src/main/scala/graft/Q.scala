@@ -57,8 +57,17 @@ object Q {
     * every action still scans parquet. This is the same metadata reuse
     * a catalog table gives for free (guide §6 file-listing caches);
     * sharing one plan object across queries is the ordinary self-join
-    * shape DeduplicateRelations handles. Keyed weakly on the session
-    * so test sessions don't pin plans after stop(). */
+    * shape DeduplicateRelations handles.
+    *
+    * Contract: a path must be immutable for the life of the session.
+    * The memo pins the file listing and schema of the first read, so a
+    * rewrite of `$dir/$name.parquet` after that read is served the old
+    * file list (stale rows, or FileNotFound on vanished part files);
+    * write fixtures before their first `Q.t`. Likewise read-time
+    * configs (e.g. timestamp inference) apply only to the first read.
+    * The session key is weak, but every memoized plan reaches back to
+    * its session, so entries are never collected: a stopped session
+    * and its plans stay pinned for the life of the JVM. */
   private val readMemo =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]

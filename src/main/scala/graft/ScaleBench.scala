@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Trace
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,32 +132,18 @@ object ScaleBench {
     java.nio.file.Files.createFile(marker)
   }
 
-  /** Shuffle-write byte accumulator: wall time oscillates with the
-    * host, but the bytes a plan MOVES per input volume are exact and
-    * deterministic — the second, noise-free exponent the artifact
-    * carries. (Approximately per-query: the async listener bus can
-    * leak a straggler task into the next window, like Bench's spill
-    * telemetry.) */
-  private final class ShuffleMeter
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var bytes = 0L
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) bytes += m.shuffleWriteMetrics.bytesWritten
-    }
-    def reset(): Unit = bytes = 0L
-  }
-
+  /** Wall seconds and shuffle-write bytes of one run. Wall time
+    * oscillates with the host, but the bytes a plan MOVES per input
+    * volume are exact and deterministic — the second, noise-free
+    * exponent the artifact carries. */
   private def timeOne(spark: SparkSession, name: String, dir: String,
-      meter: ShuffleMeter): (Double, Long) = {
-    meter.reset()
+      trace: Trace, tag: String): (Double, Long) = {
     val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, dir).count()
+    trace.run(tag)(SparkEntry.queries(name)(spark, dir).count())
     val sec = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     System.gc() // reap localCheckpoint blocks outside timed windows
-    (sec, meter.bytes)
+    (sec, trace.drain(tag).shuffleWriteBytes)
   }
 
   def main(args: Array[String]): Unit = {
@@ -166,15 +153,8 @@ object ScaleBench {
       "/root/testdata/sf0.001")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outRoot = "target/scale-synth"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val x1 = s"$outRoot/x1"
     val xN = s"$outRoot/x$copies"
     val filter = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
@@ -186,21 +166,21 @@ object ScaleBench {
         "matched no registered heavy query")
     generate(spark, baseDir, x1, 1)
     generate(spark, baseDir, xN, copies)
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val trace = Trace.attach(spark)
     val results = queries.map { name =>
       // untimed warmup: codegen/JIT once per query shape
       try SparkEntry.queries(name)(spark, warmDir).count()
       catch { case _: Throwable => () }
       spark.catalog.clearCache(); System.gc()
       // interleave x1/xN reps so a host slow window hits both sides
-      val pairs = (1 to reps).map { _ =>
-        (timeOne(spark, name, x1, meter), timeOne(spark, name, xN, meter))
+      val pairs = (1 to reps).map { r =>
+        (timeOne(spark, name, x1, trace, s"scale-$name-x1-$r"),
+          timeOne(spark, name, xN, trace, s"scale-$name-x$copies-$r"))
       }
       val t1 = pairs.map(_._1._1).min
       val tN = pairs.map(_._2._1).min
-      // bytes: max over reps (a straggler listener event can UNDERcount
-      // a window; it never overcounts a deterministic plan)
+      // bytes: max over reps (a drain that times out can UNDERcount a
+      // run; it never overcounts a deterministic plan)
       val b1 = pairs.map(_._1._2).max
       val bN = pairs.map(_._2._2).max
       val e = math.log(tN / t1) / math.log(copies.toDouble)

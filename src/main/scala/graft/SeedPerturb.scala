@@ -214,14 +214,7 @@ object SeedPerturb {
     val seed = if (args.length > 2) args(2).toInt else 1
     val outDir =
       if (args.length > 1) args(1) else s"target/seedperturb/sf0.01_s$seed"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Q.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     generate(spark, baseDir, outDir, seed)
     println(s"""{"seedperturb":{"base":"$baseDir","out":"$outDir","seed":$seed}}""")
     spark.stop()

@@ -682,10 +682,18 @@ object Dedup {
         .observe(obs, sum(when(col("component") =!= col("_prev"), 1L)
           .otherwise(0L)).as("changed"))
         .localCheckpoint(true)
-      converged = obs.get.get("changed").forall {
-        case null => true // sum over zero rows: no labels at all
-        case n: Number => n.longValue() == 0L
-      }
+      // Bounded wait: the metrics arrive on the async listener bus
+      // (normally within milliseconds), which may drop events under queue
+      // pressure; without them, recount the changed labels on the
+      // checkpointed round instead of hanging.
+      converged =
+        try {
+          val row = scala.concurrent.Await.result(obs.future,
+            scala.concurrent.duration.Duration(10, "s"))
+          row.isNullAt(0) || row.getLong(0) == 0L // null: sum over zero rows
+        } catch { case _: java.util.concurrent.TimeoutException =>
+          next.filter(col("component") =!= col("_prev")).isEmpty
+        }
       labels = next.select(col("id"), col("component"))
       round += 1
     }

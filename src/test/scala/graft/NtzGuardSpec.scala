@@ -15,12 +15,27 @@ class NtzGuardSpec extends SparkSpec {
 
   test("events ingestion is NTZ-proof: unix_micros analyzes on an NTZ fixture") {
     val dir = java.nio.file.Files.createTempDirectory("ntz").toString
-    // Plant a fixture whose on-disk ts is µs-without-timezone: writing a
-    // TIMESTAMP_NTZ column produces exactly the isAdjustedToUTC=false
-    // parquet the regenerated testdata carries.
-    Q.t(spark, sf("sf0.001"), "events").limit(100)
-      .withColumn("ts", col("ts").cast(TimestampNTZType))
-      .write.parquet(s"$dir/events.parquet")
+    // Plant a fixture whose on-disk ts is µs-without-timezone
+    // (isAdjustedToUTC=false), written the way the regenerated testdata
+    // was — by a non-Spark writer. A Spark-written file would also store
+    // its Spark schema in the footer, which overrides timestamp inference
+    // and would make the config path below read NTZ as well.
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("message events { " +
+      "required int64 event_id; required int64 ts (TIMESTAMP(MICROS,false)); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try Q.t(spark, sf("sf0.001"), "events").limit(100)
+      .select(col("event_id"), unix_micros(col("ts"))).collect()
+      .foreach { r =>
+        writer.write(rows.newGroup()
+          .append("event_id", r.getLong(0)).append("ts", r.getLong(1)))
+      }
+    finally writer.close()
 
     // Read it the way the drifted environment did: NTZ inference ON.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
@@ -39,14 +54,21 @@ class NtzGuardSpec extends SparkSpec {
 
     // Instants must agree between the config path (inference off → LTZ)
     // and the cast path (NTZ → LTZ in the UTC session): same µs values.
-    val viaConfig = Q.t(spark, dir, "events")
-      .select(col("event_id"), unix_micros(col("ts")).as("us"))
+    // Both legs bypass Q.t, whose memo would serve the plan resolved
+    // above under inference ON to both — comparing the cast path to
+    // itself. The raw types prove the legs really differ.
+    def micros(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("event_id"), unix_micros(col("ts")).as("us"))
+        .collect().toSet
+    val rawConfig = spark.read.parquet(s"$dir/events.parquet")
+    assert(rawConfig.schema("ts").dataType == TimestampType)
+    val viaConfig = micros(rawConfig)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     try {
-      val viaCast = Q.eventTs(spark.read.parquet(s"$dir/events.parquet"))
-        .select(col("event_id"), unix_micros(col("ts")).as("us"))
-      assert(viaConfig.except(viaCast).isEmpty &&
-        viaCast.except(viaConfig).isEmpty)
+      val rawCast = spark.read.parquet(s"$dir/events.parquet")
+      assert(rawCast.schema("ts").dataType == TimestampNTZType)
+      val viaCast = micros(Q.eventTs(rawCast))
+      assert(viaConfig.size == 100 && viaConfig == viaCast)
     } finally
       spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
   }

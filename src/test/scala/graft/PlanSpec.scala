@@ -338,4 +338,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("isFinalPlan=true") &&
       (p.contains("WholeStageCodegen") || p.contains("*(")), p.take(1500))
   }
+
+  test("q162's energyProfile64 kernel is planned once " +
+      "(InferFiltersFromGenerate stays excluded)") {
+    // Q.sessionConfigs excludes InferFiltersFromGenerate: with the rule
+    // on, the `size(lv) > 0` filter it synthesizes under posexplode is
+    // pushed down with lv's alias chain substituted, so the kernel is
+    // evaluated a second time below the query's own filters.
+    val opt = graft.queries.SimilarityQ.q162.run(spark, sf("sf0.001"))
+      .queryExecution.optimizedPlan
+    val kernels = opt.collect { case node =>
+      node.expressions.map(_.collect {
+        case e: graft.functions.Expressions.EnergyProfile64 => e
+      }.size).sum
+    }.sum
+    assert(kernels == 1, opt.treeString)
+  }
 }

@@ -11,14 +11,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-    Q.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = Session.local(8, Map(
+      "spark.app.name" -> "graft-test",
+      "spark.driver.host" -> "localhost"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
