@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import graft.core.{Masks, SignalBuilder}
 import graft.core.Schemas.ManifestRow
 import graft.dm.Dm
@@ -17,34 +15,6 @@ import org.apache.spark.sql.functions._
   * `runMain graft.Demo /tmp/graft_demo`
   */
 object Demo {
-
-  /** Write a real IDAT v3 binary (same layout the decoder parses). */
-  def writeIdat(path: String, ids: Array[Int], means: Array[Int]): Unit = {
-    val n = ids.length
-    def strBytes(s: String): Array[Byte] =
-      Array(s.length.toByte) ++ s.getBytes("UTF-8")
-    val secs = scala.collection.mutable.LinkedHashMap[Int, Array[Byte]]()
-    def le(cap: Int) = ByteBuffer.allocate(cap).order(ByteOrder.LITTLE_ENDIAN)
-    secs(1000) = { val b = le(4); b.putInt(n); b.array() }
-    secs(102) = { val b = le(n * 4); ids.foreach(b.putInt); b.array() }
-    secs(104) = { val b = le(n * 2)
-      means.foreach(m => b.putShort((m & 0xffff).toShort)); b.array() }
-    secs(103) = { val b = le(n * 2)
-      ids.foreach(_ => b.putShort(7)); b.array() }
-    secs(107) = Array.fill(n)(9.toByte)
-    secs(402) = strBytes("207001")
-    secs(403) = strBytes("BeadChip")
-    secs(300) = { val b = le(4); b.putInt(0); b.array() }
-    val headerLen = 4 + 8 + 4 + secs.size * 10
-    var off = headerLen.toLong
-    val offsets = secs.map { case (c, p) => val o = off; off += p.length; (c, o) }
-    val out = le(off.toInt)
-    out.put("IDAT".getBytes("US-ASCII")); out.putLong(3L)
-    out.putInt(secs.size)
-    offsets.foreach { case (c, o) => out.putShort(c.toShort); out.putLong(o) }
-    secs.values.foreach(out.put)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), out.array())
-  }
 
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft_demo")
@@ -72,6 +42,7 @@ object Demo {
     }
     val manifest = manifestRows.toDF().dropDuplicates("illumina_id")
     val allAddresses = manifestRows.map(_.illumina_id).distinct.sorted.toArray
+    val nProbes = allAddresses.length
 
     // write 4 sample pairs: group B hypermethylated on probes 0-49
     val samples = Seq("GSMA1_207001_R01C01", "GSMA2_207001_R02C01",
@@ -85,10 +56,14 @@ object Demo {
         val base = if (isM == boosted) 6000 else 800
         base + rnd.nextInt(200)
       }
-      writeIdat(s"$workDir/${s}_Grn.idat",
-        allAddresses, allAddresses.map(a => intensity(a, grn = true)))
-      writeIdat(s"$workDir/${s}_Red.idat",
-        allAddresses, allAddresses.map(a => intensity(a, grn = false)))
+      def write(channel: String, grn: Boolean): Unit =
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$workDir/${s}_$channel.idat"),
+          Idat.encode(Idat.IdatData("207001", "BeadChip", nProbes,
+            allAddresses, allAddresses.map(a => intensity(a, grn).toFloat),
+            Array.fill(nProbes)(7f), Array.fill(nProbes)(9: Short), Nil)))
+      write("Grn", grn = true)
+      write("Red", grn = false)
     }
 
     // ---- the user journey ----

@@ -10,7 +10,7 @@ import java.util.zip.{GZIPInputStream, ZipInputStream}
   * directory, from which the distributed IDAT scan (S1/S6) then reads.
   * Deliberately NOT a Spark op — the reference treats it as a driver
   * utility and so do we; at cluster scale the data lands on shared
-  * storage and executors read it via the binaryFile scan.
+  * storage and executors read it via the `idat` DataSource V2 scan.
   *
   * Tar support is a minimal ustar reader (512-byte headers, octal size
   * at offset 124) — enough for GEO's .tar idat bundles; no external

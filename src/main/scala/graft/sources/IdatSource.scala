@@ -23,6 +23,7 @@ import org.apache.spark.sql.types.{FloatType, IntegerType, LongType,
   ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** `spark.read.format("idat")` — DataSource V2 for Illumina IDAT v3
   * (SURVEY §4.3(4): the promotion from `binaryFile` + `mapPartitions`
@@ -44,9 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     aggregate pushdown — one row per file, no per-probe row
   *     iteration at all. On object stores each section is one range
   *     request instead of a whole-object GET.
-  *   - gzipped files have no random access: the reader detects the
-  *     gzip magic and falls back to whole-file decode
-  *     ([[Idat.decode]]), preserving behavior.
+  *
+  * All byte parsing, gzip included, is [[Idat.open]]'s: a gzipped file
+  * is gunzipped into memory and read through the same section reader.
   *
   * Schema: one row per probe —
   * `(path, barcode, chip_type, illumina_id, mean, std_dev, n_beads)`.
@@ -161,28 +162,11 @@ class IdatScanBuilder(paths: Seq[String])
     new IdatScan(paths, required, pathKeep, barcodeKeep, countStar)
 }
 
-/** Hadoop Configuration is not Serializable; the standard wrapper
-  * (write/readFields round-trip) ships it to executors. */
-class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 case class IdatInputPartition(path: String) extends InputPartition
 
 class IdatScan(paths: Seq[String], required: StructType,
-    pathKeep: Option[Set[String]] = None,
-    barcodeKeep: Option[Set[String]] = None,
-    countStar: Boolean = false)
-    extends Scan with Batch {
+    pathKeep: Option[Set[String]], barcodeKeep: Option[Set[String]],
+    countStar: Boolean) extends Scan with Batch {
   override def readSchema(): StructType =
     if (countStar)
       StructType(Seq(StructField("count(*)", LongType, nullable = false)))
@@ -228,116 +212,38 @@ class IdatScan(paths: Seq[String], required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new IdatReaderFactory(required,
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
       barcodeKeep, countStar)
 }
 
 class IdatReaderFactory(required: StructType,
-    conf: SerializableHadoopConf,
-    barcodeKeep: Option[Set[String]] = None,
-    countStar: Boolean = false)
-    extends PartitionReaderFactory {
+    conf: SerializableConfiguration, barcodeKeep: Option[Set[String]],
+    countStar: Boolean) extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
-    if (countStar)
-      new IdatCountReader(
-        partition.asInstanceOf[IdatInputPartition].path,
-        conf.value, barcodeKeep)
-    else new IdatPartitionReader(
-      partition.asInstanceOf[IdatInputPartition].path, required,
-      conf.value, barcodeKeep)
+    new IdatPartitionReader(partition.asInstanceOf[IdatInputPartition].path,
+      required, conf.value, barcodeKeep, countStar)
 }
 
-/** COUNT(*)-pushdown reader: one row per file carrying the probe count
-  * from the 4-byte NUM_SNPS_READ section (plus the barcode section
-  * when a pushed barcode filter must be honored — a miss contributes
-  * 0). No data section is ever opened. Gzipped files fall back to
-  * whole-file decode (no random access), still emitting one row. */
-class IdatCountReader(pathStr: String, conf: Configuration,
-    barcodeKeep: Option[Set[String]] = None)
-    extends PartitionReader[InternalRow] {
-  import java.nio.{ByteBuffer, ByteOrder}
-
-  private var emitted = false
-  private val count: Long = {
-    val hp = new Path(pathStr)
-    val fs = hp.getFileSystem(conf)
-    val len = fs.getFileStatus(hp).getLen
-    val in = fs.open(hp)
-    try {
-      val head = new Array[Byte](2)
-      in.readFully(0, head)
-      if ((head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b) {
-        require(len <= Int.MaxValue,
-          s"$pathStr: gzipped IDAT too large for whole-file decode")
-        val raw = new Array[Byte](len.toInt)
-        in.readFully(0, raw)
-        val d = Idat.decode(raw)
-        if (barcodeKeep.forall(_.contains(d.barcode))) d.nSnpsRead.toLong
-        else 0L
-      } else {
-        val header = new Array[Byte](16)
-        in.readFully(0, header)
-        val hb = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-        val magic = new Array[Byte](4)
-        hb.get(magic)
-        require(new String(magic, "US-ASCII") == "IDAT",
-          s"$pathStr: not an IDAT file")
-        require(hb.getLong == 3, s"$pathStr: unsupported IDAT version")
-        val numFields = hb.getInt
-        val dir = new Array[Byte](numFields * 10)
-        in.readFully(16, dir)
-        val db = ByteBuffer.wrap(dir).order(ByteOrder.LITTLE_ENDIAN)
-        val offsets = (0 until numFields).map { _ =>
-          val code = db.getShort & 0xffff
-          code -> db.getLong
-        }.toMap
-        def readAt(off: Long, size: Int): ByteBuffer = {
-          val a = new Array[Byte](size)
-          in.readFully(off, a)
-          ByteBuffer.wrap(a).order(ByteOrder.LITTLE_ENDIAN)
-        }
-        val bcMatch = barcodeKeep.forall { k =>
-          // varint length + UTF-8 payload (barcodes are short)
-          val off = offsets(402)
-          val b = readAt(off, math.min(256L, len - off).toInt)
-          var numBytes = b.get & 0xff
-          var numChars = numBytes % 128
-          var shift = 0
-          while (numBytes / 128 == 1) {
-            numBytes = b.get & 0xff
-            shift += 7
-            numChars += (numBytes % 128) << shift
-          }
-          val arr = new Array[Byte](numChars)
-          b.get(arr, 0, numChars)
-          k.contains(new String(arr, "UTF-8"))
-        }
-        if (bcMatch) readAt(offsets(1000), 4).getInt.toLong else 0L
-      }
-    } finally in.close()
-  }
-
-  override def next(): Boolean =
-    if (emitted) false else { emitted = true; true }
-  override def get(): InternalRow =
-    new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-}
-
-/** Reads exactly the sections the pruned schema needs, via seeks into
-  * the section directory; whole-file decode only for gzipped inputs. A
-  * pushed barcode filter is decided from the barcode section alone —
-  * on a miss the reader emits zero rows without touching any data
-  * section. */
+/** Reads one file through [[Idat.open]]. A pushed barcode filter is
+  * decided from the barcode section alone — a miss reads no other
+  * section. A match reads NUM_SNPS_READ; a COUNT(*) scan emits that
+  * count as its one row (0 on a miss) and opens no data section, a row
+  * scan reads just the sections its pruned schema names. */
 class IdatPartitionReader(pathStr: String, required: StructType,
-    conf: Configuration, barcodeKeep: Option[Set[String]] = None)
-    extends PartitionReader[InternalRow] {
+    conf: Configuration, barcodeKeep: Option[Set[String]],
+    countStar: Boolean) extends PartitionReader[InternalRow] {
 
-  import java.nio.{ByteBuffer, ByteOrder}
+  // column ordinals resolved ONCE — a string match per field per row
+  // would cost a million-probe file ~7M comparisons in the hot loop
+  private val colIds: Array[Int] =
+    if (countStar) Array.empty
+    else required.fieldNames.map(IdatTable.Schema.fieldIndex)
+  private def need(col: String) =
+    !countStar && required.fieldNames.contains(col)
 
-  private val fieldNames = required.fields.map(_.name)
+  private val pathUtf = UTF8String.fromString(pathStr)
   private var n = 0
   private var idx = -1
   private var ids: Array[Int] = _
@@ -346,159 +252,52 @@ class IdatPartitionReader(pathStr: String, required: StructType,
   private var beads: Array[Short] = _
   private var barcode: UTF8String = _
   private var chipType: UTF8String = _
-  private var pathUtf: UTF8String = _
 
   locally {
-    pathUtf = UTF8String.fromString(pathStr)
     val hp = new Path(pathStr)
     val fs = hp.getFileSystem(conf)
-    val len = fs.getFileStatus(hp).getLen
     val in = fs.open(hp)
     try {
-      val head = new Array[Byte](2)
-      in.readFully(0, head)
-      if ((head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b) {
-        // gzip: no random access — whole-file decode
-        require(len <= Int.MaxValue,
-          s"$pathStr: gzipped IDAT too large for whole-file decode " +
-            s"($len bytes)")
-        val raw = new Array[Byte](len.toInt)
-        in.readFully(0, raw)
-        val d = Idat.decode(raw)
-        if (barcodeKeep.forall(_.contains(d.barcode))) {
-          n = d.nSnpsRead
-          ids = d.illuminaIds; means = d.means; stds = d.stdDevs
-          beads = d.nBeads.map(b => b)
-          barcode = UTF8String.fromString(d.barcode)
-          chipType = UTF8String.fromString(d.chipType)
-        } // else: pushed barcode filter miss — zero rows
-      } else {
-        val header = new Array[Byte](16)
-        in.readFully(0, header)
-        val hb = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-        val magic = new Array[Byte](4)
-        hb.get(magic)
-        require(new String(magic, "US-ASCII") == "IDAT",
-          s"$pathStr: not an IDAT file")
-        val version = hb.getLong
-        require(version == 3, s"$pathStr: IDAT version $version != 3")
-        val numFields = hb.getInt
-        val dir = new Array[Byte](numFields * 10)
-        in.readFully(16, dir)
-        val db = ByteBuffer.wrap(dir).order(ByteOrder.LITTLE_ENDIAN)
-        val offsets = (0 until numFields).map { _ =>
-          val code = db.getShort & 0xffff
-          code -> db.getLong
-        }.toMap
-        def sect(code: Int): Long = offsets.getOrElse(code,
-          throw new IllegalArgumentException(
-            s"$pathStr: missing IDAT section $code"))
-        def readAt(off: Long, size: Int): ByteBuffer = {
-          val a = new Array[Byte](size)
-          in.readFully(off, a)
-          ByteBuffer.wrap(a).order(ByteOrder.LITTLE_ENDIAN)
-        }
-        def readVarintString(off: Long): UTF8String = {
-          // varint length (7-bit groups) + UTF-8 bytes; strings are
-          // normally short, so one bounded read usually covers prefix +
-          // payload — but a payload running past the first read gets a
-          // second ranged read for the remainder instead of
-          // underflowing the buffer
-          val size = math.min(4096L, len - off).toInt
-          val b = readAt(off, size)
-          var numBytes = b.get & 0xff
-          var numChars = numBytes % 128
-          var shift = 0
-          var prefixLen = 1
-          while (numBytes / 128 == 1) {
-            numBytes = b.get & 0xff
-            prefixLen += 1
-            shift += 7
-            numChars += (numBytes % 128) << shift
-          }
-          val arr = new Array[Byte](numChars)
-          val avail = math.min(numChars, size - prefixLen)
-          b.get(arr, 0, avail)
-          if (avail < numChars)
-            in.readFully(off + prefixLen + avail, arr, avail,
-              numChars - avail)
-          UTF8String.fromBytes(arr)
-        }
-        // pushed barcode filter: one tiny ranged read decides the whole
-        // file — a miss reads NO other section
-        val bcMatch = barcodeKeep.forall { k =>
-          barcode = readVarintString(sect(402))
-          k.contains(barcode.toString)
-        }
-        if (bcMatch) {
-          n = readAt(sect(1000), 4).getInt
-          def need(col: String) = fieldNames.contains(col)
-          if (need("illumina_id")) {
-            val b = readAt(sect(102), n * 4)
-            ids = new Array[Int](n)
-            var i = 0; while (i < n) { ids(i) = b.getInt; i += 1 }
-          }
-          if (need("mean")) {
-            val b = readAt(sect(104), n * 2)
-            means = new Array[Float](n)
-            var i = 0
-            while (i < n) {
-              means(i) = (b.getShort & 0xffff).toFloat; i += 1
-            }
-          }
-          if (need("std_dev")) {
-            val b = readAt(sect(103), n * 2)
-            stds = new Array[Float](n)
-            var i = 0
-            while (i < n) {
-              stds(i) = (b.getShort & 0xffff).toFloat; i += 1
-            }
-          }
-          if (need("n_beads")) {
-            val b = readAt(sect(107), n)
-            beads = new Array[Short](n)
-            var i = 0
-            while (i < n) { beads(i) = (b.get & 0xff).toShort; i += 1 }
-          }
-          if (need("barcode") && barcode == null)
-            barcode = readVarintString(sect(402))
-          if (need("chip_type")) chipType = readVarintString(sect(403))
-        }
+      val idat = Idat.open(fs.getFileStatus(hp).getLen,
+        in.readFully(_, _, _, _), pathStr)
+      val bc =
+        if (barcodeKeep.isDefined || need("barcode")) idat.barcode else null
+      if (barcodeKeep.forall(_.contains(bc))) {
+        n = idat.nSnpsRead
+        barcode = UTF8String.fromString(bc)
+        if (need("chip_type")) chipType = UTF8String.fromString(idat.chipType)
+        if (need("illumina_id")) ids = idat.illuminaIds(n)
+        if (need("mean")) means = idat.means(n)
+        if (need("std_dev")) stds = idat.stdDevs(n)
+        if (need("n_beads")) beads = idat.nBeads(n)
       }
     } finally in.close()
   }
 
-  override def next(): Boolean = { idx += 1; idx < n }
-
-  // column ordinals resolved ONCE — a string match per field per row
-  // would cost a million-probe file ~7M comparisons in the hot loop
-  private val colIds: Array[Int] = fieldNames.map {
-    case "path" => 0
-    case "barcode" => 1
-    case "chip_type" => 2
-    case "illumina_id" => 3
-    case "mean" => 4
-    case "std_dev" => 5
-    case "n_beads" => 6
+  override def next(): Boolean = {
+    idx += 1
+    idx < (if (countStar) 1 else n)
   }
 
-  override def get(): InternalRow = {
-    val vals = new Array[Any](colIds.length)
-    var f = 0
-    while (f < colIds.length) {
-      vals(f) = colIds(f) match {
-        case 0 => pathUtf
-        case 1 => barcode
-        case 2 => chipType
-        case 3 => ids(idx)
-        case 4 => means(idx)
-        case 5 => stds(idx)
-        case 6 => beads(idx)
+  override def get(): InternalRow =
+    if (countStar) new GenericInternalRow(Array[Any](n.toLong))
+    else {
+      val vals = new Array[Any](colIds.length)
+      var f = 0
+      while (f < colIds.length) {
+        vals(f) = colIds(f) match {
+          case 0 => pathUtf
+          case 1 => barcode
+          case 2 => chipType
+          case 3 => ids(idx)
+          case 4 => means(idx)
+          case 5 => stds(idx)
+          case 6 => beads(idx)
+        }
+        f += 1
       }
-      f += 1
+      new GenericInternalRow(vals)
     }
-    new GenericInternalRow(vals)
-  }
 
   override def close(): Unit = ()
 }

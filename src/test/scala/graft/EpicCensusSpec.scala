@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Masks, Schemas}
-import graft.io.IdatGen
+import graft.io.Idat
 import org.apache.spark.sql.functions._
 
 /** EPICv2 cardinality-invariant fixture: synthesizes a manifest and one
@@ -98,8 +98,9 @@ class EpicCensusSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("epic").toFile
     def write(name: String, off: Int): Unit =
       java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-        IdatGen.makeIdat(ids, ids.map(i => i % 3000 + 100 + off),
-          Array.fill(ids.length)(1), Array.fill(ids.length)(5)))
+        Idat.encode(Idat.IdatData("barcode123", "BeadChip 8x5", ids.length,
+          ids, ids.map(i => (i % 3000 + 100 + off).toFloat),
+          Array.fill(ids.length)(1f), Array.fill(ids.length)(5: Short), Nil)))
     write("epic_s1_Grn.idat", 0)
     write("epic_s1_Red.idat", 37)
 

@@ -6,15 +6,28 @@ import java.util.zip.GZIPOutputStream
 
 import graft.SparkSpec
 
-/** Synthesizes IDAT v3 binaries byte-for-byte per the format the decoder
-  * implements (reference read_idat.py:217-398) and round-trips them. */
+/** Synthesizes IDAT v3 binaries with [[Idat.encode]] (the format the
+  * reference parses, read_idat.py:217-398) and round-trips them. */
 class IdatSpec extends SparkSpec {
 
-  /** Build a minimal valid IDAT v3 file (shared synthesizer). */
+  /** Build a minimal valid IDAT v3 file with one RUN_INFO entry. */
   def makeIdat(ids: Array[Int], means: Array[Int], stds: Array[Int],
       beads: Array[Int], barcode: String = "barcode123",
       chipType: String = "BeadChip 8x5"): Array[Byte] =
-    IdatGen.makeIdat(ids, means, stds, beads, barcode, chipType)
+    Idat.encode(Idat.IdatData(barcode, chipType, ids.length, ids,
+      means.map(_.toFloat), stds.map(_.toFloat), beads.map(_.toShort),
+      Seq(Idat.RunInfo("2024-01-01", "Scan", "params", "block", "1.0"))))
+
+  def gzip(raw: Array[Byte]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val gz = new GZIPOutputStream(bos)
+    gz.write(raw); gz.close()
+    bos.toByteArray
+  }
+
+  /** An IdatData's fields with arrays compared by content. */
+  def fields(d: Idat.IdatData): Seq[Any] =
+    d.productIterator.map { case a: Array[_] => a.toSeq; case x => x }.toSeq
 
   val ids = Array(10, 20, 30, 40)
   val means = Array(100, 65535, 0, 1234)
@@ -32,14 +45,18 @@ class IdatSpec extends SparkSpec {
     assert(d.nBeads.toSeq == beads.map(_.toShort).toSeq)
     assert(d.runInfo.head.entryType == "Scan")
     assert(d.overflowOk)
+    // decode(encode(d)) == d over the plain, gzipped and 5 KB-barcode
+    // fixtures
+    val plain = makeIdat(ids, means, stds, beads)
+    val long = makeIdat(ids, means, stds, beads, barcode = "BC" + "x" * 5000)
+    for (raw <- Seq(plain, gzip(plain), long)) {
+      val d = Idat.decode(raw)
+      assert(fields(Idat.decode(Idat.encode(d))) == fields(d))
+    }
   }
 
   test("gzip transparent") {
-    val raw = makeIdat(ids, means, stds, beads)
-    val bos = new ByteArrayOutputStream()
-    val gz = new GZIPOutputStream(bos)
-    gz.write(raw); gz.close()
-    val d = Idat.decode(bos.toByteArray)
+    val d = Idat.decode(gzip(makeIdat(ids, means, stds, beads)))
     assert(d.illuminaIds.toSeq == ids.toSeq)
   }
 
@@ -59,12 +76,9 @@ class IdatSpec extends SparkSpec {
     java.nio.file.Files.write(f1.toPath, makeIdat(ids, means, stds, beads))
     // gzipped sibling exercises the whole-file fallback inside the
     // same scan
-    val bos = new ByteArrayOutputStream()
-    val gz = new GZIPOutputStream(bos)
-    gz.write(makeIdat(ids.map(_ + 1), means, stds, beads,
-      barcode = "gzbc")); gz.close()
     val f2 = new java.io.File(dir, "b_Grn.idat.gz")
-    java.nio.file.Files.write(f2.toPath, bos.toByteArray)
+    java.nio.file.Files.write(f2.toPath,
+      gzip(makeIdat(ids.map(_ + 1), means, stds, beads, barcode = "gzbc")))
 
     val df = spark.read.format("idat")
       .load(f1.getAbsolutePath, f2.getAbsolutePath)
@@ -95,15 +109,18 @@ class IdatSpec extends SparkSpec {
 
   test("barcode longer than the 4 KB bounded read decodes via the " +
       "second ranged read (multi-byte varint prefix)") {
+    import org.apache.spark.sql.functions.col
     val long = "BC" + "x" * 5000 // varint prefix is 2 bytes
     val raw = makeIdat(ids, means, stds, beads, barcode = long)
     assert(Idat.decode(raw).barcode == long)
     val dir = java.nio.file.Files.createTempDirectory("idatlong").toFile
     val f = new java.io.File(dir, "c_Grn.idat")
     java.nio.file.Files.write(f.toPath, raw)
-    val got = spark.read.format("idat").load(f.getAbsolutePath)
-      .select("barcode").distinct().collect().map(_.getString(0)).toSeq
-    assert(got == Seq(long))
+    val df = spark.read.format("idat").load(f.getAbsolutePath)
+    val got = df.select("barcode").distinct().collect().map(_.getString(0))
+    assert(got.toSeq == Seq(long))
+    // the COUNT(*) path reads the same long barcode section
+    assert(df.filter(col("barcode").isin(long, "zzz")).count() == 4)
   }
 
   test("pushed path filter prunes files at planning; pushed barcode " +
@@ -181,9 +198,16 @@ class IdatSpec extends SparkSpec {
     // correct total even though B's data sections are unreadable
     assert(df.count() == 8L)
     // composes with the pushed barcode filter: B contributes its 4
-    // probes via barcode+NUM_SNPS_READ sections only
-    assert(df.filter(col("barcode") === "BBB").count() == 4L)
-    assert(df.filter(col("barcode") === "ZZZ").count() == 0L)
+    // probes via barcode+NUM_SNPS_READ sections only. `isin` of two
+    // values, because `=== v` also gets a non-pushable isnotnull
+    // residual that sends the count down the row path
+    for ((keep, want) <- Seq(Seq("BBB", "YYY") -> 4L, Seq("ZZZ", "YYY") -> 0L)) {
+      val byBarcode = df.filter(col("barcode").isin(keep: _*))
+      val plan = byBarcode.groupBy().count().queryExecution.executedPlan
+      assert(plan.toString.contains("PushedAggregation: [COUNT(*)]"),
+        plan.toString.take(1500))
+      assert(byBarcode.count() == want)
+    }
     // a residual (non-pushable) filter disables the pushdown: Spark
     // falls back to the row path, which must throw on B's corrupt
     // data sections — proving count() above never took that path

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.core.Schemas.ManifestRow
+import graft.io.Idat
 import org.apache.spark.sql.functions._
 
 class IncrementalIngestSpec extends SparkSpec {
@@ -23,10 +24,13 @@ class IncrementalIngestSpec extends SparkSpec {
 
     def writeSample(label: String, scale: Int): Unit = {
       val ids = Array(10, 30, 31)
-      graft.Demo.writeIdat(s"$work/${label}_Grn.idat", ids,
-        ids.map(_ * scale))
-      graft.Demo.writeIdat(s"$work/${label}_Red.idat", ids,
-        ids.map(_ * scale + 1))
+      def write(channel: String, means: Array[Int]): Unit =
+        Files.write(Paths.get(s"$work/${label}_$channel.idat"),
+          Idat.encode(Idat.IdatData("207001", "BeadChip", ids.length, ids,
+            means.map(_.toFloat), Array.fill(ids.length)(7f),
+            Array.fill(ids.length)(9: Short), Nil)))
+      write("Grn", ids.map(_ * scale))
+      write("Red", ids.map(_ * scale + 1))
       Files.writeString(Paths.get(s"$manifestDir/$label.txt"),
         s"$label,G,$work/${label}_Grn.idat\n" +
           s"$label,R,$work/${label}_Red.idat\n")
