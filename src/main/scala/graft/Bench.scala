@@ -231,13 +231,14 @@ object Bench {
     // 2000-char window anyway. The scalar diagnostics are re-appended
     // at the END of the full line so the bounded artifact tail keeps
     // the totals/worst-5 human-readable even if a parser elsewhere is
-    // tail-windowed.
+    // tail-windowed. The summary's `record_bytes` is the full line's
+    // UTF-8 length, so its growth toward a tail window shows.
     val worst5 = mins.flatMap { case (name, mn) =>
       ref.get(name).map(r => name -> mn / r)
     }.sortBy(-_._2).take(5)
-    val summary = s"""{"metric":"total","value":$total,"unit":"sec","summary":true,"n_queries":${med.size},"worst5_min_ratio":${jmap(worst5)},"n_outlier_reruns":${outliers.size},"n_failed":${failed.size},"reps":$Reps,"ref_loaded":${ref.nonEmpty},"ref_queries":${ref.size},"ref_missing_n":${refMissing.size},"full_record":"target/bench.json","sf":"$sfDir"}"""
-    println(summary)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(med)},"queries_min":${jmap(mins)},"outliers":$outlierJson,"outliers_failed":${jfail(outFailed)},"outlier_telemetry":$outlierTelJson,"telemetry":$telemetryJson,"failed":${jfail(failed)},"storage_fraction":$storageFraction,"ref_path":${jstr(refPath)},"ref_missing":$refMissingJson,"total_sec":$total,"n_queries":${med.size},"worst5_min_ratio":${jmap(worst5)},"n_outlier_reruns":${outliers.size},"n_failed":${failed.size},"reps":$Reps,"ref_loaded":${ref.nonEmpty},"ref_queries":${ref.size},"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","summary":true,"n_queries":${med.size},"worst5_min_ratio":${jmap(worst5)},"n_outlier_reruns":${outliers.size},"n_failed":${failed.size},"reps":$Reps,"ref_loaded":${ref.nonEmpty},"ref_queries":${ref.size},"ref_missing_n":${refMissing.size},"record_bytes":${line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length},"full_record":"target/bench.json","sf":"$sfDir"}"""
+    println(summary)
     // Persist the full record to disk too — r6 lost q01-q14's rows to
     // log truncation; target/bench.json is the authoritative copy.
     try {

@@ -46,45 +46,41 @@ object Q {
   /** Load one of the driver-generated parquet tables from an sf dir;
     * `events.ts` is normalized via [[eventTs]].
     *
-    * The resolved PLAN is memoized per (session, path): every
-    * `spark.read.parquet` pays ~30-40 ms of driver-side DataSource
-    * resolution (file listing + parquet footer/schema inference), and
-    * the registry re-reads the same handful of immutable tables
-    * hundreds of times per bench pass — r16 DriverProfile measured
-    * ~0.07-0.15 s of pure construction time per sub-second query, the
-    * single largest driver-overhead component. The memo holds the lazy
-    * DataFrame (logical plan + file index + schema), NEVER results:
-    * every action still scans parquet. This is the same metadata reuse
-    * a catalog table gives for free (guide §6 file-listing caches);
-    * sharing one plan object across queries is the ordinary self-join
-    * shape DeduplicateRelations handles.
+    * The first call in a session registers `$dir/$name.parquet` as a
+    * temp view named [[view]] (`events` with [[eventTs]] inside it), and
+    * every call returns `spark.table(view)`: every `spark.read.parquet`
+    * pays ~30-40 ms of driver-side DataSource resolution (file listing +
+    * parquet footer/schema inference), and the registry re-reads the
+    * same handful of tables hundreds of times per bench pass — r16
+    * DriverProfile measured ~0.07-0.15 s of pure construction time per
+    * sub-second query, the single largest driver-overhead component.
+    * The view holds the resolved plan (file index + schema), NEVER
+    * results: every action still scans parquet.
     *
-    * Contract: a path must be immutable for the life of the session.
-    * The memo pins the file listing and schema of the first read, so a
-    * rewrite of `$dir/$name.parquet` after that read is served the old
-    * file list (stale rows, or FileNotFound on vanished part files);
-    * write fixtures before their first `Q.t`. Likewise read-time
-    * configs (e.g. timestamp inference) apply only to the first read.
-    * The session key is weak, but every memoized plan reaches back to
-    * its session, so entries are never collected: a stopped session
-    * and its plans stay pinned for the life of the JVM. */
-  private val readMemo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]
+    * Contract:
+    *   - entries are per session: the view lives and dies with its
+    *     session, and `spark.newSession()` starts without it;
+    *   - the view pins the file listing of the first read, so after a
+    *     rewrite of the path run `REFRESH TABLE` on the view
+    *     (`spark.catalog.refreshTable(Q.view(dir, name))`) to re-list it;
+    *   - read-time configs (e.g. timestamp inference) still apply only
+    *     at the first read;
+    *   - view names are case-insensitive, like every catalog name, so
+    *     two paths that differ only by case share one view. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val per = readMemo.synchronized {
-      var m = readMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-        readMemo.put(spark, m)
-      }
-      m
+    val v = view(dir, name)
+    if (!spark.catalog.tableExists(v)) {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      (if (name == "events") eventTs(df) else df).createOrReplaceTempView(v)
     }
-    per.computeIfAbsent(s"$dir/$name.parquet", p => {
-      val df = spark.read.parquet(p)
-      if (name == "events") eventTs(df) else df
-    })
+    spark.table(v)
   }
+
+  /** The temp view [[t]] registers for `$dir/$name.parquet`: its
+    * backtick-quoted path, so tables of different sf dirs cannot
+    * collide. */
+  def view(dir: String, name: String): String =
+    "`" + s"$dir/$name.parquet".replace("`", "``") + "`"
 
   /** Shift-invariant fixture key: rewrite `key` to `key − min(key)`
     * (one-row broadcast join — `df` itself never shuffles). Fixture

@@ -99,6 +99,8 @@ object Dm {
       (samples, sampleIdx, x.toArray, xtxInv.toArray, pinvFull.toArray))
 
     val nF = design.factorNames.length
+    // general-p pinv fit; p = 2 never reaches it (`grouped` below sends
+    // simple regression to the pure-codegen route)
     val fitUdf = udf((m: Map[String, Double]) => {
       val (sampleOrder, idxOf, xArr, xtxInvArr, pinvArr) = bcast.value
       val n = sampleOrder.length
@@ -113,44 +115,6 @@ object Dm {
       val y = pairs.map(_._2)
       val k = present.length
       if (k < p + 1) Array.fill(2 + 4 * nF)(Double.NaN)
-      else if (p == 2) {
-        // Simple regression (intercept + one covariate): closed-form
-        // sufficient statistics with ORDERED folds — ascending design
-        // index, i.e. lexicographic sample order, the same sequence an
-        // ordered SQL aggregate replays. This is both faster than the
-        // matrix path (no per-probe inversion) and makes every emitted
-        // statistic BIT-identical to a transcribed oracle: the
-        // pinv-vs-closed-form ~1e-13 drift flipped round(·, 6) cells
-        // whose true values are dyadic half-boundaries (OLS slopes over
-        // rational betas land on ...5 exactly; observed at sf0.1).
-        var sx = 0.0; var sxx = 0.0; var sy = 0.0
-        var sxy = 0.0; var syy = 0.0
-        var i = 0
-        while (i < k) {
-          val xi = xFull(present(i), 1); val yi = y(i)
-          sx += xi; sxx += xi * xi; sy += yi
-          sxy += xi * yi; syy += yi * yi
-          i += 1
-        }
-        val nD = k.toDouble
-        val det = nD * sxx - sx * sx
-        if (det == 0) Array.fill(2 + 4 * nF)(Double.NaN)
-        else {
-          val slope = (nD * sxy - sx * sy) / det
-          val icept = (sy - slope * sx) / nD
-          val sigma2 =
-            math.max(syy - icept * sy - slope * sxy, 0.0) / (nD - 2)
-          val dof = k - 2
-          val seI = math.sqrt(sigma2 * sxx / det)
-          val seS = math.sqrt(sigma2 * nD / det)
-          val tI = if (seI == 0) Double.NaN else icept / seI
-          val tS = if (seS == 0) Double.NaN else slope / seS
-          val pI = StatFuncs.tTwoSidedP(tI, dof)
-          val pS = StatFuncs.tTwoSidedP(tS, dof)
-          val effect = math.max(slope, 0.0) - math.min(slope, 0.0)
-          Array(pS, effect, pI, tI, icept, seI, pS, tS, slope, seS)
-        }
-      }
       else {
         val sub: Option[(DenseMatrix[Double], DenseMatrix[Double],
             DenseMatrix[Double])] =
@@ -331,7 +295,13 @@ object Dm {
           coalesce(col("beta").cast("double"), lit(Double.NaN))))).as("ys"))
       .withColumn("fit", fitUdf(col("ys")))
       .drop("ys")
+    statsTable(grouped, design)
+  }
 
+  /** Shared tail of [[computeDmp]] and [[computeDmpMixed]]: unpack the
+    * per-probe `fit` array into `f_pvalue`, `effect_size` and the
+    * per-factor columns, then BH-adjust each factor's p-values. */
+  private def statsTable(grouped: DataFrame, design: Design): DataFrame = {
     val sanitized = design.factorNames.map(sanitize)
     val withCols = sanitized.zipWithIndex.foldLeft(
       grouped
@@ -433,27 +403,7 @@ object Dm {
           coalesce(col("beta").cast("double"), lit(Double.NaN))))).as("ys"))
       .withColumn("fit", fitUdf(col("ys")))
       .drop("ys")
-    val sanitized = design.factorNames.map(sanitize)
-    val withCols = sanitized.zipWithIndex.foldLeft(
-      grouped
-        .withColumn("f_pvalue", element_at(col("fit"), 1))
-        .withColumn("effect_size", element_at(col("fit"), 2))) {
-      case (df, (f, i)) =>
-        df.withColumn(s"${f}_p_value", element_at(col("fit"), 3 + 4 * i))
-          .withColumn(s"${f}_t_value", element_at(col("fit"), 4 + 4 * i))
-          .withColumn(s"${f}_estimate", element_at(col("fit"), 5 + 4 * i))
-          .withColumn(s"${f}_std_err", element_at(col("fit"), 6 + 4 * i))
-    }
-    // Folding adjustBH multiplies the plan: each call references its
-    // input from three branches (rank, counts, null-passthrough), so k
-    // factors analyze the upstream lineage 3^k times — localCheckpoint
-    // truncates it to a leaf first (the per-probe stats frame is the
-    // natural materialization point; caching alone does NOT shrink the
-    // LOGICAL plan the analyzer walks).
-    val statsBase = withCols.drop("fit").localCheckpoint()
-    sanitized.foldLeft(statsBase) { (df, f) =>
-      adjustBH(df, s"${f}_p_value", s"${f}_p_value_adjusted")
-    }
+    statsTable(grouped, design)
   }
 
   /** L3/W7 — Benjamini-Hochberg adjustment over the non-null p-values

@@ -1142,52 +1142,72 @@ object Expressions {
   def energyProfile64(samples: Column): Column =
     column(EnergyProfile64(expression(samples)))
 
-  /** Register the kernels as SQL functions on a session
-    * (`SELECT erfc(x)`, `norm_log_sf(z)`, `norm_inv(p)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("erfc",
-      es => Erfc(toD(es.head)), "built-in")
-    reg.createOrReplaceTempFunction("norm_log_sf",
-      es => NormLogSf(toD(es.head)), "built-in")
-    reg.createOrReplaceTempFunction("norm_inv",
-      es => NormInv(toD(es.head)), "built-in")
-    reg.createOrReplaceTempFunction("poly_hash64",
-      es => PolyHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_hashes",
-      es => TokenHashes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("normalize_text",
-      es => NormalizeText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("strip_markup",
-      es => StripMarkup(es.head), "built-in")
-    reg.createOrReplaceTempFunction("script_profile",
-      es => ScriptProfile(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gram_repetition",
-      es => GramRepetition(es.head, es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"gram_repetition(str, n): n must be an integer literal, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      es => VecDot(toAD(es(0)), toAD(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      es => VecCosine(toAD(es(0)), toAD(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("long_eq_frac",
-      es => LongEqFrac(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash31",
-      es => RollingHash31(es.head), "built-in")
-    reg.createOrReplaceTempFunction("vec_sqdist",
-      es => VecSqDist(toAD(es(0)), toAD(es(1))), "built-in")
+  /** One SQL function: its name, the expression class its
+    * `ExpressionInfo` names, and the builder over the call's argument
+    * expressions. */
+  final case class SqlFunction(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression)
+
+  /** graft's SQL surface, one entry per name. [[GraftExtensions]]
+    * injects every entry into each session built with it. */
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("erfc", classOf[Erfc], es => Erfc(toD(es.head))),
+    SqlFunction("norm_log_sf", classOf[NormLogSf],
+      es => NormLogSf(toD(es.head))),
+    SqlFunction("norm_inv", classOf[NormInv], es => NormInv(toD(es.head))),
+    SqlFunction("poly_hash64", classOf[PolyHash64],
+      es => PolyHash64(es.head)),
+    SqlFunction("token_hashes", classOf[TokenHashes],
+      es => TokenHashes(es.head)),
+    SqlFunction("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
+    SqlFunction("normalize_text", classOf[NormalizeText],
+      es => NormalizeText(es.head)),
+    SqlFunction("strip_markup", classOf[StripMarkup],
+      es => StripMarkup(es.head)),
+    SqlFunction("script_profile", classOf[ScriptProfile],
+      es => ScriptProfile(es.head)),
+    SqlFunction("gram_repetition", classOf[GramRepetition],
+      es => GramRepetition(es.head, litInt(es(1)))),
+    SqlFunction("word_shingle_hashes", classOf[WordShingleHashes],
+      es => WordShingleHashes(es.head, litInt(es(1)))),
+    SqlFunction("minhash_sig", classOf[MinHashSig],
+      es => MinHashSig(es.head, litInt(es(1)), litInt(es(2)))),
+    SqlFunction("srp_sketch64", classOf[SrpSketch64],
+      es => SrpSketch64(es.head, litInt(es(1)))),
+    SqlFunction("top_k", classOf[TopKAgg],
+      es => TopKAgg(es(0), es(1), litInt(es(2)))),
+    SqlFunction("vec_dot", classOf[VecDot],
+      es => VecDot(toAD(es(0)), toAD(es(1)))),
+    SqlFunction("vec_cosine", classOf[VecCosine],
+      es => VecCosine(toAD(es(0)), toAD(es(1)))),
+    SqlFunction("rolling_hash31", classOf[RollingHash31],
+      es => RollingHash31(es.head)),
+    SqlFunction("long_eq_frac", classOf[LongEqFrac],
+      es => LongEqFrac(es(0), es(1))),
+    SqlFunction("vec_sqdist", classOf[VecSqDist],
+      es => VecSqDist(toAD(es(0)), toAD(es(1)))),
+    SqlFunction("zorder2", classOf[ZOrder2],
+      es => ZOrder2(toL(es(0)), toL(es(1)), litInt(es(2)))),
+    SqlFunction("ahash64", classOf[AHash64],
+      es => AHash64(es.head, litInt(es(1)), litInt(es(2)))),
+    SqlFunction("dhash64", classOf[DHash64],
+      es => DHash64(es.head, litInt(es(1)), litInt(es(2)))),
+    SqlFunction("energy_profile64", classOf[EnergyProfile64],
+      es => EnergyProfile64(es.head)))
+
+  /** Integer literal argument of a SQL call (k, numHashes, dim …). */
+  private def litInt(e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"expected an integer literal argument, got $other")
   }
 }
 
 /** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.functions.GraftExtensions` injects the
-  * statistical kernels into every session's SQL surface at build time —
-  * the registration path a cluster deployment uses (no per-session
-  * register() call). */
+  * or `spark.sql.extensions=graft.functions.GraftExtensions` injects
+  * [[Expressions.sqlFunctions]] and the overlap-join rewrite into every
+  * session at build time — the registration path a cluster deployment
+  * uses. */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -1197,110 +1217,9 @@ class GraftExtensions
       e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     // Optimizer rule: naive range-overlap joins → binned equi joins
     e.injectOptimizerRule(sp => graft.plans.RewriteOverlapJoin(sp))
-    e.injectFunction((FunctionIdentifier("erfc"),
-      new ExpressionInfo(classOf[Expressions.Erfc].getName, "erfc"),
-      (es: Seq[Expression]) => Expressions.Erfc(Expressions.toD(es.head))))
-    e.injectFunction((FunctionIdentifier("norm_log_sf"),
-      new ExpressionInfo(classOf[Expressions.NormLogSf].getName,
-        "norm_log_sf"),
-      (es: Seq[Expression]) => Expressions.NormLogSf(Expressions.toD(es.head))))
-    e.injectFunction((FunctionIdentifier("norm_inv"),
-      new ExpressionInfo(classOf[Expressions.NormInv].getName, "norm_inv"),
-      (es: Seq[Expression]) => Expressions.NormInv(Expressions.toD(es.head))))
-    e.injectFunction((FunctionIdentifier("poly_hash64"),
-      new ExpressionInfo(classOf[Expressions.PolyHash64].getName,
-        "poly_hash64"),
-      (es: Seq[Expression]) => Expressions.PolyHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("token_hashes"),
-      new ExpressionInfo(classOf[Expressions.TokenHashes].getName,
-        "token_hashes"),
-      (es: Seq[Expression]) => Expressions.TokenHashes(es.head)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[Expressions.SimHash64].getName,
-        "simhash64"),
-      (es: Seq[Expression]) => Expressions.SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[Expressions.NormalizeText].getName,
-        "normalize_text"),
-      (es: Seq[Expression]) => Expressions.NormalizeText(es.head)))
-    e.injectFunction((FunctionIdentifier("strip_markup"),
-      new ExpressionInfo(classOf[Expressions.StripMarkup].getName,
-        "strip_markup"),
-      (es: Seq[Expression]) => Expressions.StripMarkup(es.head)))
-    e.injectFunction((FunctionIdentifier("script_profile"),
-      new ExpressionInfo(classOf[Expressions.ScriptProfile].getName,
-        "script_profile"),
-      (es: Seq[Expression]) => Expressions.ScriptProfile(es.head)))
-    e.injectFunction((FunctionIdentifier("gram_repetition"),
-      new ExpressionInfo(classOf[Expressions.GramRepetition].getName,
-        "gram_repetition"),
-      (es: Seq[Expression]) =>
-        Expressions.GramRepetition(es.head, litInt(es(1)))))
-    e.injectFunction((FunctionIdentifier("word_shingle_hashes"),
-      new ExpressionInfo(classOf[Expressions.WordShingleHashes].getName,
-        "word_shingle_hashes"),
-      (es: Seq[Expression]) =>
-        Expressions.WordShingleHashes(es.head, litInt(es(1)))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[Expressions.MinHashSig].getName,
-        "minhash_sig"),
-      (es: Seq[Expression]) =>
-        Expressions.MinHashSig(es.head, litInt(es(1)), litInt(es(2)))))
-    e.injectFunction((FunctionIdentifier("srp_sketch64"),
-      new ExpressionInfo(classOf[Expressions.SrpSketch64].getName,
-        "srp_sketch64"),
-      (es: Seq[Expression]) =>
-        Expressions.SrpSketch64(es.head, litInt(es(1)))))
-    e.injectFunction((FunctionIdentifier("top_k"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "top_k"),
-      (es: Seq[Expression]) => TopKAgg(es(0), es(1), litInt(es(2)))))
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[Expressions.VecDot].getName, "vec_dot"),
-      (es: Seq[Expression]) =>
-        Expressions.VecDot(Expressions.toAD(es(0)), Expressions.toAD(es(1)))))
-    e.injectFunction((FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[Expressions.VecCosine].getName,
-        "vec_cosine"),
-      (es: Seq[Expression]) =>
-        Expressions.VecCosine(Expressions.toAD(es(0)),
-          Expressions.toAD(es(1)))))
-    e.injectFunction((FunctionIdentifier("rolling_hash31"),
-      new ExpressionInfo(classOf[Expressions.RollingHash31].getName,
-        "rolling_hash31"),
-      (es: Seq[Expression]) => Expressions.RollingHash31(es.head)))
-    e.injectFunction((FunctionIdentifier("long_eq_frac"),
-      new ExpressionInfo(classOf[Expressions.LongEqFrac].getName,
-        "long_eq_frac"),
-      (es: Seq[Expression]) => Expressions.LongEqFrac(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_sqdist"),
-      new ExpressionInfo(classOf[Expressions.VecSqDist].getName,
-        "vec_sqdist"),
-      (es: Seq[Expression]) =>
-        Expressions.VecSqDist(Expressions.toAD(es(0)),
-          Expressions.toAD(es(1)))))
-    e.injectFunction((FunctionIdentifier("zorder2"),
-      new ExpressionInfo(classOf[Expressions.ZOrder2].getName, "zorder2"),
-      (es: Seq[Expression]) =>
-        Expressions.ZOrder2(Expressions.toL(es(0)), Expressions.toL(es(1)),
-          litInt(es(2)))))
-    e.injectFunction((FunctionIdentifier("ahash64"),
-      new ExpressionInfo(classOf[Expressions.AHash64].getName, "ahash64"),
-      (es: Seq[Expression]) =>
-        Expressions.AHash64(es.head, litInt(es(1)), litInt(es(2)))))
-    e.injectFunction((FunctionIdentifier("dhash64"),
-      new ExpressionInfo(classOf[Expressions.DHash64].getName, "dhash64"),
-      (es: Seq[Expression]) =>
-        Expressions.DHash64(es.head, litInt(es(1)), litInt(es(2)))))
-    e.injectFunction((FunctionIdentifier("energy_profile64"),
-      new ExpressionInfo(classOf[Expressions.EnergyProfile64].getName,
-        "energy_profile64"),
-      (es: Seq[Expression]) => Expressions.EnergyProfile64(es.head)))
-  }
-
-  /** Integer literal argument of a SQL call (k, numHashes, dim …). */
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"expected an integer literal argument, got $other")
+    Expressions.sqlFunctions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
   }
 }

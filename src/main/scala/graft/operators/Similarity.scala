@@ -168,16 +168,21 @@ object Similarity {
       cents: Seq[(Long, Array[Double])], vecCol: String = "embedding",
       outCol: String = "ivf_cluster"): DataFrame = {
     require(cents.nonEmpty, "centroid set must not be empty")
-    val v = asDouble(col(vecCol))
+    df.withColumn(outCol, nearest(asDouble(col(vecCol)), cents).getField("c"))
+  }
+
+  /** The (d, c) struct of `v`'s nearest centroid, scored as
+    * [[withNearestCentroid]] describes (also pqTrain's per-subspace
+    * assignment and encoding). */
+  private def nearest(v: Column, cents: Seq[(Long, Array[Double])])
+      : Column = {
     val scored = cents.map { case (cid, c) =>
       struct(
         graft.functions.Expressions.vecSqDist(v, typedlit(c.toSeq))
           .as("d"),
         lit(cid).as("c"))
     }
-    val best =
-      if (scored.size == 1) scored.head else least(scored: _*)
-    df.withColumn(outCol, best.getField("c"))
+    if (scored.size == 1) scored.head else least(scored: _*)
   }
 
   /** Collect a (cluster, centroid) frame to the driver. KB-sized by
@@ -448,16 +453,8 @@ object Similarity {
     var it = 0
     while (it < iters) {
       val withCodes = (0 until m).foldLeft(corpus) { (df, s) =>
-        val sv = slice(v, s * sub + 1, sub)
-        val scored = books(s).map { case (cid, c) =>
-          struct(
-            graft.functions.Expressions.vecSqDist(sv, typedlit(c.toSeq))
-              .as("d"),
-            lit(cid).as("c"))
-        }
-        val best =
-          if (scored.size == 1) scored.head else least(scored: _*)
-        df.withColumn(s"__pq_it_$s", best.getField("c"))
+        df.withColumn(s"__pq_it_$s",
+          nearest(slice(v, s * sub + 1, sub), books(s)).getField("c"))
       }
       books = collectBooks(
         withCodes.select(
@@ -471,14 +468,7 @@ object Similarity {
       it += 1
     }
     val encoded = (0 until m).foldLeft(corpus) { (df, s) =>
-      val sv = slice(asDouble(col(vecCol)), s * sub + 1, sub)
-      val scored = books(s).map { case (cid, c) =>
-        struct(
-          graft.functions.Expressions.vecSqDist(sv, typedlit(c.toSeq))
-            .as("d"),
-          lit(cid).as("c"))
-      }
-      val best = if (scored.size == 1) scored.head else least(scored: _*)
+      val best = nearest(slice(v, s * sub + 1, sub), books(s))
       df.withColumn(s"pq_code_$s", best.getField("c"))
         .withColumn(s"__pq_err_$s", best.getField("d"))
     }

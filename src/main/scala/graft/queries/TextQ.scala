@@ -317,7 +317,6 @@ object TextQ {
     "q35_rolling_hash",
     (s, d) => {
       import s.implicits._
-      graft.functions.Expressions.register(s)
       t(s, d, "documents")
         .select($"doc_id",
           TextAnalysis.rollingHash($"text").as("rhash"),
@@ -1774,7 +1773,6 @@ object TextQ {
     "q160_normalized_dedup",
     (s, d) => {
       import s.implicits._
-      graft.functions.Expressions.register(s)
       val docs = t(s, d, "documents")
       val variants = docs.select($"doc_id",
           concat($"text", lit(" caf\u00E9  ")).as("text")) // composed

@@ -54,9 +54,9 @@ class NtzGuardSpec extends SparkSpec {
 
     // Instants must agree between the config path (inference off → LTZ)
     // and the cast path (NTZ → LTZ in the UTC session): same µs values.
-    // Both legs bypass Q.t, whose memo would serve the plan resolved
-    // above under inference ON to both — comparing the cast path to
-    // itself. The raw types prove the legs really differ.
+    // Both legs bypass Q.t, whose session view would serve the plan
+    // resolved above under inference ON to both — comparing the cast
+    // path to itself. The raw types prove the legs really differ.
     def micros(df: org.apache.spark.sql.DataFrame) =
       df.select(col("event_id"), unix_micros(col("ts")).as("us"))
         .collect().toSet

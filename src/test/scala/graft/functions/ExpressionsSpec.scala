@@ -21,7 +21,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("session-registered SQL functions") {
-    Expressions.register(spark)
     val r = spark.sql(
       "SELECT erfc(0.5) AS a, norm_log_sf(2.0) AS b, norm_inv(0.975) AS c")
       .head()
@@ -38,8 +37,13 @@ class ExpressionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext) // must register all without throwing
   }
 
+  test("SQL surface: one table entry per name, each one in the session") {
+    val names = Expressions.sqlFunctions.map(_.name)
+    assert(names.nonEmpty && names.distinct == names)
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
+  }
+
   test("SQL surface: hash kernels + top_k callable from spark.sql") {
-    Expressions.register(spark)
     val r = spark.sql("""
       SELECT poly_hash64('abc') AS ph,
              simhash64('a b c') AS sh,
@@ -78,7 +82,6 @@ class ExpressionsSpec extends SparkSpec {
       }
     }
     // SQL surface
-    Expressions.register(spark)
     val s = spark.sql(
       "SELECT vec_cosine(array(1.0, 0.0), array(1.0, 0.0)) AS c").head()
     assert(s.getDouble(0) === 1.0)

@@ -11,13 +11,11 @@ import org.apache.spark.sql.functions._
 class HashKernelsSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val docs = {
-    Expressions.register(spark)
+  private lazy val docs =
     spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select($"doc_id", $"text")
       .union(Seq((9001L, "one"), (9002L, "a b c"), (9003L, "x y"))
         .toDF("doc_id", "text"))
-  }
 
   test("token_hashes == transform(split, poly_hash64)") {
     val bad = docs.select(
