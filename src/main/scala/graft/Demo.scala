@@ -95,6 +95,7 @@ object Demo {
     // analyzer cost linear (cache leaves the logical plan intact)
     val withP = withP0.localCheckpoint()
     println(s"[demo] poobah masked ${poobahMask.count()} (sample, probe) pairs")
+    withP0.unpersist() // Prep.poobah's contract: withP now holds the rows
 
     val betas = SignalBuilder.calculateBetas(withP).localCheckpoint()
     betas.groupBy("sample_label")

@@ -173,8 +173,9 @@ object Cnv {
           lit("b").as("kind")))).as("r"))
       .select(col("chrom"), col("r.*"))
     // ≤ semantics: probe rows sort before query rows at equal position.
-    // Pin the exchange's parallelism against AQE byte-coalescing, the
-    // same reasoning as Ecdf.ecdfLookup.
+    // Pin the exchange's parallelism against AQE byte-coalescing: the
+    // sort + running frames are CPU-bound but byte-small, so AQE's
+    // byte-based coalescing would squeeze them onto a handful of tasks.
     val n = spark.sessionState.conf.numShufflePartitions
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("chrom"))

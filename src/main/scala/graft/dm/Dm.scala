@@ -206,8 +206,7 @@ object Dm {
           .map { case (s, i) => (s, i, design.rows(s)(1)) }
           .toDF("sample_label", "si", "xi"))
       }
-      // Pin the fit stage's parallelism (same rationale as
-      // Ecdf.ecdfLookup's keyed repartition): the per-probe stats stage
+      // Pin the fit stage's parallelism: the per-probe stats stage
       // is CPU-bound but byte-SMALL (~8 MB at sf0.1), so AQE's byte-based
       // coalescing squeezes the probe-keyed exchange onto ONE task and
       // serializes every probe's fold + t-survival evaluation (measured:
@@ -388,7 +387,7 @@ object Dm {
 
     val grouped = betas
       .filter(col("sample_label").isin(samples: _*))
-      // Parallelism pin (Ecdf rationale): the golden-section LMM fit is
+      // Parallelism pin: the golden-section LMM fit is
       // ~36 likelihood evaluations PER PROBE but the probe-keyed
       // exchange is only ~8 MB at sf0.1, so AQE's byte-based coalescing
       // was running every fit in ONE task (measured: a 5.1 s single-task

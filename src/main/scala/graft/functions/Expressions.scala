@@ -705,6 +705,32 @@ object Expressions {
         r: Expression): TTwoSidedP = copy(left = l, right = r)
   }
 
+  /** ecdf_count(sorted, v) — #(elements ≤ v) of a null-free ascending
+    * array<double> by binary search (StatFuncs.ecdfCount, Spark's double
+    * ordering). Null when either input is null. The per-row lookup of
+    * [[graft.operators.Ecdf]]; a Column helper only, no SQL name. */
+  case class EcdfCount(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = IntegerType
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+      (left.dataType, right.dataType) match {
+        case (ArrayType(DoubleType, _), DoubleType) =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        case (a, b) =>
+          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+            s"ecdf_count requires (ARRAY<DOUBLE>, DOUBLE), got " +
+              s"(${a.sql}, ${b.sql})")
+      }
+    override def nullSafeEval(a: Any, v: Any): Any =
+      StatFuncs.ecdfCount(a.asInstanceOf[ArrayData], v.asInstanceOf[Double])
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, v) => s"$kernel$$.MODULE$$.ecdfCount($a, $v)")
+    override protected def withNewChildrenInternal(l: Expression,
+        r: Expression): EcdfCount = copy(left = l, right = r)
+  }
+
   /** poly_hash64(str) — portable Rabin-Karp 64-bit fingerprint (see
     * HashFuncs.polyHash64). Backs MinHash / SimHash / rolling-hash dedup
     * so their whole hash families stay DuckDB-oracle-checkable. */
@@ -1127,6 +1153,11 @@ object Expressions {
     column(SortedIntersectCount(expression(a), expression(b)))
   def vecSqDist(a: Column, b: Column): Column =
     column(VecSqDist(toAD(expression(a)), toAD(expression(b))))
+
+  /** `sorted` is passed uncast (EcdfCount checks it is array<double>):
+    * a cast would copy the array on every row. */
+  def ecdfCount(sorted: Column, v: Column): Column =
+    column(EcdfCount(expression(sorted), Cast(expression(v), DoubleType)))
 
   /** Cast a SQL argument to long (the Z-order kernel is long-only). */
   def toL(e: Expression): Expression =

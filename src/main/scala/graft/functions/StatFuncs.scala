@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 
 /** Scalar statistical functions the engine needs beyond Spark's built-ins
@@ -263,6 +264,22 @@ object StatFuncs {
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
       if (sorted(mid) <= x) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** [[ecdfCount]] over a null-free ascending Catalyst array, in Spark's
+    * double ordering (`SQLOrderingUtil.compareDoubles`: NaN is greatest
+    * and equals NaN, −0.0 = 0.0) — the ordering `sort_array` sorts by, so
+    * ties with the array (NaN included) count as ≤ x. Backs the
+    * `ecdf_count` kernel of [[graft.operators.Ecdf]]. */
+  def ecdfCount(sorted: ArrayData, x: Double): Int = {
+    var lo = 0; var hi = sorted.numElements()
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (SQLOrderingUtil.compareDoubles(sorted.getDouble(mid), x) <= 0)
+        lo = mid + 1
+      else hi = mid
     }
     lo
   }

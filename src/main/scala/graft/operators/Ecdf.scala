@@ -1,83 +1,72 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import graft.functions.Expressions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed empirical-CDF lookup (reference: statsmodels ECDF used by
   * pOOBAH, samples.py:1591-1592): for each query row, F(v) = #(background
   * values ≤ v) / n_background within its group.
   *
-  * Scale path: a SORT-MERGE instead of a broadcast lookup table. The
-  * background and query rows are unioned and windowed per group ordered
-  * by (value, is_background DESC) — a running sum of the background flag
-  * IS the "≤ v" count (ties resolve right-continuously because equal
-  * background values sort before the query row). One shuffle, partitions
-  * bounded by per-group data. The collect-sort-broadcast alternative is
-  * O(total background) DRIVER memory — ~3 GB/1000 samples for pOOBAH —
-  * and caps at the JVM; this path has no driver state at all.
+  * Algorithm: the background is reduced to ONE ascending array per group
+  * ([[sortedBackground]]: `sort_array(collect_list(value))`, its length
+  * and its ascending sum), the queries are equi-joined to that frame on
+  * the group columns, and each query's count of background values ≤ v is
+  * a binary search of its group's array ([[ecdf]], the `ecdf_count`
+  * kernel). Comparisons use Spark's double ordering — NaN is greatest and
+  * equals NaN, −0.0 = 0.0 — so a background value tied with the query
+  * counts as ≤ (right-continuous, like statsmodels).
+  *
+  * No driver state: the arrays are built by a distributed aggregate and
+  * joined, never collected, so broadcast versus shuffle is Spark's own
+  * join selection (AQE and `autoBroadcastJoinThreshold`). A collected,
+  * broadcast lookup table would be O(total background) DRIVER memory —
+  * ~3 GB per 1000 samples for pOOBAH — and cap at the JVM. Memory bound:
+  * one sorted array per group, held by the task that aggregates it and
+  * by each task that probes it (8 bytes per background value).
   */
 object Ecdf {
 
+  /** The sorted-background frame: one row per group of `groupCols` and,
+    * for each `name -> value`, three columns: `${name}_sorted` (the
+    * group's non-null values cast to double, ascending), `${name}_n`
+    * (its length) and `${name}_sum` (the array folded in ascending order
+    * — deterministic at any parallelism; null when the array is empty,
+    * like SQL's `sum`). Several named values share one aggregate, e.g.
+    * one array per channel over a per-sample grouping. */
+  def sortedBackground(background: DataFrame, groupCols: Seq[String],
+      values: (String, Column)*): DataFrame = {
+    val aggs = values.map { case (name, v) =>
+      sort_array(collect_list(v.cast("double"))).as(s"${name}_sorted")
+    }
+    val sorted = background.groupBy(groupCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    values.foldLeft(sorted) { case (df, (name, _)) =>
+      val arr = col(s"${name}_sorted")
+      df.withColumn(s"${name}_n", size(arr))
+        .withColumn(s"${name}_sum",
+          when(size(arr) > 0, aggregate(arr, lit(0.0), _ + _)))
+    }
+  }
+
+  /** F(v) = #(sorted ≤ v) / n by binary search over a
+    * [[sortedBackground]] array and its length. Null for a null `v`, a
+    * null array (group absent from the background) or an empty one. */
+  def ecdf(sorted: Column, n: Column, v: Column): Column =
+    when(n > 0, Expressions.ecdfCount(sorted, v) / n)
+
   /** Attach `outCol` = F(valueCol) to `queries` (any schema containing
-    * groupCols + valueCol). Null values and groups absent from
-    * `background` yield null. `background` must expose groupCols +
-    * valueCol.
-    *
-    * `bgSumCol`: optionally ALSO attach the group's total background
-    * mass (sum of background values) to every query row. The sort-merge
-    * already windows the union per group, so this is one more
-    * whole-partition frame over the same exchange — callers that need
-    * the group sum (pOOBAH's weak-background prior switch) get it for
-    * free instead of re-aggregating the background subtree, which on a
-    * derived background can mean recomputing its whole lineage. */
+    * groupCols + valueCol; its columns and rows are kept as they are).
+    * Null values, groups absent from `background` and null group keys
+    * yield null. `background` must expose groupCols + valueCol. */
   def ecdfLookup(queries: DataFrame, background: DataFrame,
       groupCols: Seq[String], valueCol: String,
-      outCol: String, bgSumCol: Option[String] = None): DataFrame = {
-    // appended columns must not collide with the query schema: a
-    // duplicate name would silently produce two identically-named
-    // columns on the main branch but OVERWRITE on the null branch —
-    // asymmetric schemas across the union
-    for (c <- outCol +: bgSumCol.toSeq)
-      require(!queries.columns.contains(c),
-        s"ecdfLookup: output column '$c' collides with a query column")
-    val gcols = groupCols.map(col)
-    val payload = struct(queries.columns.map(col): _*)
-    val q = queries.filter(col(valueCol).isNotNull)
-      .select(gcols :+ col(valueCol).cast("double").as("_ec_v") :+
-        lit(0L).as("_ec_bg") :+ payload.as("_ec_row"): _*)
-    val qNull = queries.filter(col(valueCol).isNull)
-    val b = background.filter(col(valueCol).isNotNull)
-      .select(gcols :+ col(valueCol).cast("double").as("_ec_v") :+
-        lit(1L).as("_ec_bg") :+ lit(null).cast(q.schema("_ec_row").dataType)
-          .as("_ec_row"): _*)
-    val w = Window.partitionBy(gcols: _*)
-      .orderBy(col("_ec_v").asc, col("_ec_bg").desc)
-    val wAll = Window.partitionBy(gcols: _*)
-    // Pin the window exchange's parallelism: this stage is CPU-bound
-    // (sort + three window frames per row) but byte-SMALL, so AQE's
-    // byte-based partition coalescing (advisory 64 MB) squeezes it onto
-    // a handful of tasks and serializes the sort — measured 7 s of an
-    // 11 s pOOBAH run at sf0.1. An explicit keyed repartition carries
-    // the same hash distribution the window needs (so no extra
-    // exchange) and AQE leaves user-specified partition counts alone.
-    val n = queries.sparkSession.sessionState.conf.numShufflePartitions
-    val withF = q.unionByName(b).repartition(n, gcols: _*)
-      .withColumn("_ec_le", sum(col("_ec_bg"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("_ec_n", sum(col("_ec_bg")).over(wAll))
-    val withSum = bgSumCol.map(c => withF.withColumn(c,
-        sum(when(col("_ec_bg") === 1, col("_ec_v"))).over(wAll)))
-      .getOrElse(withF)
-    val extra = bgSumCol.map(col(_)).toSeq
-    val merged = withSum
-      .filter(col("_ec_bg") === 0)
-      .select(col("_ec_row.*") +:
-        (col("_ec_le").cast("double") / nullif(col("_ec_n"), lit(0)))
-          .as(outCol) +: extra: _*)
-    merged.unionByName(
-      bgSumCol.foldLeft(
-        qNull.withColumn(outCol, lit(null).cast("double")))(
-        (df, c) => df.withColumn(c, lit(null).cast("double"))))
+      outCol: String): DataFrame = {
+    require(!queries.columns.contains(outCol),
+      s"ecdfLookup: output column '$outCol' collides with a query column")
+    val bg = sortedBackground(background, groupCols, "_ec" -> col(valueCol))
+    queries.join(bg, groupCols, "left")
+      .select(queries.columns.map(col) :+
+        ecdf(col("_ec_sorted"), col("_ec_n"), col(valueCol)).as(outCol): _*)
   }
 }

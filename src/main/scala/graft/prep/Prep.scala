@@ -2,7 +2,9 @@ package graft.prep
 
 import graft.core.{Masks, Schemas}
 import graft.functions.StatFuncs
+import graft.operators.Ecdf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Preprocessing chain (SURVEY.md §2.11 L9-L15; reference
@@ -370,7 +372,7 @@ object Prep {
     import spark.implicits._
     val tagged = zeroToOne(bgCells).withColumn("is_fg", lit(false))
       .unionByName(zeroToOne(fgCells).withColumn("is_fg", lit(true)))
-    // Parallelism pin (Ecdf rationale): the gathered Huber stage is
+    // Parallelism pin: the gathered Huber stage is
     // CPU-bound (two iterative fits per group) but byte-small (~22 MB at
     // sf0.1), so AQE's byte-based coalescing was running EVERY group's
     // fit in one task (measured: a 3.7 s single-task stage inside q63).
@@ -491,23 +493,34 @@ object Prep {
     * it (samples.py:1583-1589). Adds `p_value` and returns the poobah
     * mask rows (p ≥ threshold).
     *
-    * Scale path: [[graft.operators.Ecdf.ecdfLookup]] — a sort-merge of
-    * background and query values per (sample, channel), fully
-    * distributed. (The previous implementation collected every sample's
-    * sorted background to the driver and broadcast a lookup map into a
-    * UDF — ~3 GB of driver state per 1000 samples; this one has none.)
-    * The 0..999 prior needs no data at all: its ECDF is the closed form
-    * clamp(floor(v)+1, 0, 1000)/1000.
+    * Scale path: [[graft.operators.Ecdf]] — the background is reduced to
+    * one row per sample carrying each channel's values as an ascending
+    * array (plus its length and sum), the signal is joined to it ONCE,
+    * and each row's per-channel ECDF is a binary search of that array. No
+    * channel-query union, no sort of the queries, no driver state. The
+    * 0..999 prior needs no data at all: its ECDF is the closed form
+    * clamp(floor(v)+1, 0, 1000)/1000. Rows that repeat a (sample, probe)
+    * key all carry the key's minimum p, taken by a window that rides the
+    * signal's (sample_label, probe_id) hash partitioning.
     *
-    * Cache points (mirrors [[graft.dm.Dm.computeDmr]]): the signal frame
-    * has THREE readers here — the masked→oob background, the query
-    * extraction, and the final left join — so it is persisted for the
-    * duration of this call; on a derived signal each reader would
-    * otherwise recompute the whole upstream lineage. The RESULT frame is
-    * materialized, persisted (it feeds both returned values), and the
-    * signal cache is dropped before returning — this method therefore
-    * runs one eager Spark job. Call `.unpersist()` on the returned
-    * frame when the pipeline no longer needs it. */
+    * Output columns: `sample_label`, `probe_id`, the signal's other
+    * columns in order, then `p_value` (FLOAT).
+    *
+    * Cache points (mirrors [[graft.dm.Dm.computeDmr]]), each filled by
+    * an eager count, so this method runs three Spark jobs:
+    *   - the signal, which has several readers here (the non-unique
+    *     mask, the masked→oob background and the join); on a derived
+    *     signal each would otherwise recompute the whole upstream
+    *     lineage;
+    *   - the per-sample background arrays: once materialized, the join
+    *     is planned from their real size, so a background under the
+    *     broadcast threshold is broadcast and the signal keeps its
+    *     (sample_label, probe_id) partitioning, with no exchange before
+    *     the window; a larger one is shuffle-joined;
+    *   - the RESULT, which feeds both returned values.
+    * The signal and background caches are dropped before returning.
+    * Call `.unpersist()` on the returned frame when the pipeline no
+    * longer needs it. */
   def poobah(spark: SparkSession, signal: DataFrame, masks: DataFrame,
       useNegativeControls: Boolean = true, threshold: Double = 0.05)
       : (DataFrame, DataFrame) = {
@@ -517,8 +530,8 @@ object Prep {
     // partitioning. Keyed repartition (not round-robin: that adds a
     // per-partition full-row sort for retry determinism) spreads the
     // cache across the cluster once, and the eager count below fills it
-    // BEFORE the five readers' stages launch concurrently — otherwise
-    // each reader recomputes the same uncached partitions in parallel.
+    // BEFORE the readers' stages launch concurrently — otherwise each
+    // reader recomputes the same uncached partitions in parallel.
     val nPart = signal.sparkSession.sessionState.conf.numShufflePartitions
     val sigP = signal.repartition(nPart, col("sample_label"), col("probe_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -528,39 +541,38 @@ object Prep {
     val bg0 = oobCells(masked)
     val bg = if (useNegativeControls)
       bg0.unionByName(negControlCells(masked)) else bg0
+    val bgArr = Ecdf.sortedBackground(bg, Seq("sample_label"),
+      "bg_g" -> when(col("channel") === "G", col("value")),
+      "bg_r" -> when(col("channel") === "R", col("value")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // fill it now: left to AQE, the join's static plan over-estimates
+    // the aggregate and shuffles the whole signal by sample_label
+    // before converting to a broadcast
+    bgArr.count()
 
-    // per-channel query values: the max in-band signal per probe. Two
-    // pre-projected passes over the CACHED frame unioned, instead of one
-    // explode(map(G…,R…)): the generator route allocated a MapData +
-    // generated-row pair per input row — the round's top GC feeder —
-    // while two pure projections stay inside whole-stage codegen with
-    // zero per-row container churn (r9 verdict, q59).
-    def chanQuery(ch: String, m: String, u: String) =
-      sigP.select(col("sample_label"), col("probe_id"),
-        lit(ch).as("channel"), greatest(col(m), col(u)).as("v"))
-    val queries = chanQuery("G", "meth_g", "unmeth_g")
-      .unionByName(chanQuery("R", "meth_r", "unmeth_r"))
-    // F and the group's background mass come out of the SAME sort-merge
-    // pass (Ecdf bgSumCol): a separate weak-background aggregation would
-    // recompute the whole masked/oob lineage a second time
-    val looked = graft.operators.Ecdf.ecdfLookup(
-      queries, bg.select(col("sample_label"), col("channel"),
-        col("value").cast("double").as("v")),
-      Seq("sample_label", "channel"), "v", "F", bgSumCol = Some("_bg_sum"))
-    // weak-background groups (sum ≤ 100) switch to the 0..999 prior
-    val perChannel = looked
-      .withColumn("p", when(col("v").isNull, lit(null).cast("double"))
-        .when(coalesce(col("_bg_sum") <= 100, lit(false)),
-          lit(1.0) - least(greatest(floor(col("v")) + 1, lit(0.0)),
-            lit(1000.0)) / 1000.0)
-        .otherwise(lit(1.0) - col("F")))
-    val pv = perChannel.groupBy("sample_label", "probe_id")
-      .agg(min(col("p")).cast("float").as("p_value"))
-    val withP = sigP.drop("p_value")
-      .join(pv, Seq("sample_label", "probe_id"), "left")
+    // per channel: the max in-band signal against that channel's
+    // background; weak-background channels (sum ≤ 100) switch to the
+    // 0..999 prior
+    def channelP(ch: String, m: String, u: String): Column = {
+      val v = greatest(col(m), col(u)).cast("double")
+      when(coalesce(col(s"bg_${ch}_sum") <= 100, lit(false)),
+        lit(1.0) - least(greatest(floor(v) + 1, lit(0.0)), lit(1000.0)) /
+          1000.0)
+        .otherwise(lit(1.0) - Ecdf.ecdf(
+          col(s"bg_${ch}_sorted"), col(s"bg_${ch}_n"), v))
+    }
+    val p = least(channelP("g", "meth_g", "unmeth_g"),
+      channelP("r", "meth_r", "unmeth_r"))
+    val rest = sigP.columns.filterNot(
+      Set("sample_label", "probe_id", "p_value"))
+    val withP = sigP.join(bgArr, Seq("sample_label"), "left")
+      .select(col("sample_label") +: col("probe_id") +: rest.map(col) :+
+        min(p).over(Window.partitionBy("sample_label", "probe_id"))
+          .cast("float").as("p_value"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     withP.count() // materialize: signal lineage + ECDF run exactly once
     sigP.unpersist(blocking = false)
+    bgArr.unpersist(blocking = false)
     (withP, Masks.maskPoobah(withP, threshold))
   }
 }

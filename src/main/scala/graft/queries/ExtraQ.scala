@@ -150,8 +150,9 @@ object ExtraQ {
       WHERE l_orderkey % 100 = 0
       ORDER BY l_orderkey, line_no, metric, v"""))
 
-  /** A18 — the distributed sort-merge ECDF lookup (operators.Ecdf, the
-    * pOOBAH scale path) against a correlated-count oracle: F(v) =
+  /** A18 — the distributed ECDF lookup (operators.Ecdf, the pOOBAH
+    * scale path: one sorted background array per group, an equi-join and
+    * a binary search per query) against a correlated-count oracle: F(v) =
     * #(background ≤ v)/n per group, right-continuous. count/n is an
     * integer ratio in double — bit-identical across engines, so no
     * rounding is needed. */
@@ -538,13 +539,15 @@ object ExtraQ {
   /** L9 end-to-end — the pOOBAH slice (Prep.poobah, reference
     * samples.py:1529-1607) over a full signal-shaped frame: out-of-band
     * background extraction (type I G probes → R measurements and vice
-    * versa), the distributed sort-merge ECDF lookup per (sample,
-    * channel), the weak-background 0..999 empirical prior (one sample
-    * is all-zero so both its channels trip the `sum ≤ 100` switch), the
-    * min across channels, and the left join back onto the signal (row
-    * multiplicity preserved, NULL in-band maxima stay NULL). The oracle
-    * replays the ECDF as the same union + running-count window (a
-    * correlated subquery per query row would be quadratic); every
+    * versa), the distributed ECDF lookup per (sample, channel) — a
+    * binary search of the sample's sorted background array, joined once
+    * onto the signal — the weak-background 0..999 empirical prior (one
+    * sample is all-zero so both its channels trip the `sum ≤ 100`
+    * switch), the min across channels and across rows repeating a
+    * (sample, probe) key (row multiplicity preserved, NULL in-band
+    * maxima stay NULL). The oracle replays the ECDF as a union +
+    * running-count window and the key minimum as a group-by joined back
+    * (a correlated subquery per query row would be quadratic); every
     * arithmetic step is exact-rational in DOUBLE, so the FLOAT output
     * is compared without rounding. */
   val q59 = Q(

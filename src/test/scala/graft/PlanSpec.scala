@@ -285,17 +285,25 @@ class PlanSpec extends SparkSpec {
     // A frame with a bounded lower edge and an unbounded FOLLOWING upper
     // edge re-scans to the partition end per ROW — O(partition²); on the
     // 22M-row dye-bias apply this was a multi-minute hang. (Frames
-    // spanning the WHOLE partition are fine — computed once.) Both
-    // sort-merge lookups must express the upper bracket as a running
-    // frame over the reversed ordering.
+    // spanning the WHOLE partition are fine — computed once.) The
+    // sort-merge interpolation (q49) must express the upper bracket as a
+    // running frame over the reversed ordering.
     val quadratic =
       ("""specifiedwindowframe\(rowframe, (?!unboundedpreceding)""" +
         """[^,]+, unboundedfollowing""").r
-    for (q <- Seq(graft.queries.ExtraQ.q48, graft.queries.ExtraQ.q49)) {
-      val p = plan(q).toLowerCase
-      assert(quadratic.findFirstIn(p).isEmpty,
-        s"${q.name} plans a quadratic unbounded-following frame")
-    }
+    val p49 = plan(graft.queries.ExtraQ.q49).toLowerCase
+    assert(p49.contains("window"), p49.take(2000))
+    assert(quadratic.findFirstIn(p49).isEmpty,
+      "q49 plans a quadratic unbounded-following frame")
+    // The ECDF lookup (q48) has no frame at all: it equi-joins the
+    // queries to the background aggregated into one sorted array per
+    // group and binary-searches it.
+    val p48 = plan(graft.queries.ExtraQ.q48)
+    assert(!p48.contains("Window"), p48.take(2000))
+    assert(p48.contains("functions=[collect_list(l_extendedprice"),
+      p48.take(2000))
+    assert(Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
+      .exists(j => p48.contains(s"$j [l_returnflag")), p48.take(2000))
   }
 
   test("semDedup's within-cluster pair stage is an equi join on the " +

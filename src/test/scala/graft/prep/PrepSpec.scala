@@ -1,10 +1,17 @@
 package graft.prep
 
 import graft.SparkSpec
-import graft.core.Masks
+import graft.core.{Masks, Schemas}
 import graft.functions.StatFuncs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+/** One signal row of the pOOBAH parity fixture (the signal schema). */
+final case class PoobahCell(sample_label: String, probe_id: String,
+    inf_type: String, channel: String, probe_type: String,
+    mask_info: String, meth_g: Option[Float], meth_r: Option[Float],
+    unmeth_g: Option[Float], unmeth_r: Option[Float],
+    p_value: Option[Float] = None)
 
 /** Preprocessing semantics on a deterministic synthetic array: 150 type I
   * probes per channel + 100 type II + negative controls — big enough for
@@ -191,5 +198,113 @@ class PrepSpec extends SparkSpec {
     assert(strongP <= 0.05f)
     assert(maskRows.columns.toSeq ==
       Seq("mask_name", "sample_label", "probe_id"))
+  }
+
+  /** pOOBAH parity fixture: s1 and s2 have different backgrounds, s3 is
+    * weak (both channels sum ≤ 100, so the 0..999 prior applies). s1
+    * repeats (s1, cg_dup) with different signal, s2 has null in-band
+    * cells, and cg_nu is a non-unique-masked type-I probe whose huge
+    * out-of-band cells must leave the background. */
+  private def parityCells: Seq[PoobahCell] = {
+    val r = lcg(7L)
+    def nx(lo: Double, hi: Double): Option[Float] =
+      Some((lo + (hi - lo) * (r.next() / 1000.0)).toFloat)
+    def sample(s: String, lo: Double, hi: Double, nI: Int, nNeg: Int) =
+      (0 until nI).flatMap { i =>
+        Seq(PoobahCell(s, s"cg_g$i", "I", "G", "cg", "", nx(3 * hi, 20 * hi),
+            nx(lo, hi), nx(2 * hi, 15 * hi), nx(lo, hi)),
+          PoobahCell(s, s"cg_r$i", "I", "R", "cg", "", nx(lo, hi),
+            nx(3 * hi, 20 * hi), nx(lo, hi), nx(2 * hi, 15 * hi)))
+      } ++ (0 until 25).map(i => PoobahCell(s, s"cg_t$i", "II", null, "cg",
+        "", nx(lo, 4 * hi), None, None, nx(lo, 4 * hi))) ++
+      (0 until nNeg).map(i => PoobahCell(s, s"ctl_Negative_$i", "II", null,
+        "ctl", "", nx(lo, 2 * hi), None, None, nx(lo, 2 * hi)))
+    sample("s1", 100, 400, 40, 12) ++ sample("s2", 300, 900, 30, 8) ++
+      sample("s3", 0, 2, 4, 5) ++ Seq(
+        PoobahCell("s1", "cg_dup", "I", "G", "cg", "", Some(350f),
+          Some(120f), Some(200f), Some(300f)),
+        PoobahCell("s1", "cg_dup", "I", "G", "cg", "", Some(5000f),
+          Some(150f), Some(4000f), Some(390f)),
+        PoobahCell("s2", "cg_null", "II", null, "cg", "", None, None, None,
+          None),
+        PoobahCell("s2", "cg_half", "I", "G", "cg", "", None, Some(500f),
+          Some(4000f), None),
+        PoobahCell("s1", "cg_nu", "I", "R", "cg", "nonunique", Some(1e6f),
+          Some(5000f), Some(1e6f), Some(4000f)),
+        PoobahCell("s2", "cg_nu", "I", "R", "cg", "nonunique", Some(1e6f),
+          Some(5000f), Some(1e6f), Some(4000f)))
+  }
+
+  /** Driver-side pOOBAH over plain Scala rows: non-unique probes leave
+    * the background, each channel's background is sorted once and
+    * searched with StatFuncs.ecdfCount, weak channels take the prior,
+    * and every (sample, probe) key carries its rows' minimum. */
+  private def brutePoobah(cells: Seq[PoobahCell], negControls: Boolean)
+      : (Map[(String, String), Option[Float]], Set[(String, String)]) = {
+    val nonUnique = Schemas.nonUniqueMaskNames.r
+    val masked = cells.filter(c => nonUnique.findFirstIn(c.mask_info)
+      .isDefined).map(_.probe_id).toSet
+    val live = cells.filterNot(c => masked(c.probe_id))
+    val oob = live.filter(c => c.inf_type == "I" &&
+      Set("G", "R")(c.channel)).flatMap { c =>
+      if (c.channel == "R") Seq((c.sample_label, "G", c.meth_g),
+        (c.sample_label, "G", c.unmeth_g))
+      else Seq((c.sample_label, "R", c.meth_r),
+        (c.sample_label, "R", c.unmeth_r))
+    }
+    val neg = if (!negControls) Nil else live.filter(c =>
+      c.probe_type == "ctl" && c.probe_id.toLowerCase.contains("negative"))
+      .flatMap(c => Seq((c.sample_label, "G", c.meth_g),
+        (c.sample_label, "R", c.unmeth_r)))
+    val bg = (oob ++ neg).collect { case (s, ch, Some(v)) => (s, ch) ->
+      v.toDouble }.groupBy(_._1).map { case (k, vs) =>
+      k -> vs.map(_._2).sorted.toArray }
+    val weak = bg.keySet.filter(k => bg(k).foldLeft(0.0)(_ + _) <= 100)
+    def pCh(s: String, ch: String, a: Option[Float],
+        b: Option[Float]): Option[Double] =
+      (a ++ b).reduceOption((x, y) => math.max(x, y)).flatMap { f =>
+        val v = f.toDouble
+        bg.get((s, ch)).map { arr =>
+          if (weak((s, ch)))
+            1.0 - math.min(math.max(math.floor(v) + 1, 0.0), 1000.0) / 1000.0
+          else 1.0 - StatFuncs.ecdfCount(arr, v).toDouble / arr.length
+        }
+      }
+    val perRow = cells.map { c =>
+      (c.sample_label, c.probe_id) ->
+        (pCh(c.sample_label, "G", c.meth_g, c.unmeth_g) ++
+          pCh(c.sample_label, "R", c.meth_r, c.unmeth_r)).reduceOption(
+          (x, y) => math.min(x, y))
+    }
+    (perRow.groupBy(_._1).map { case (k, ps) =>
+      k -> ps.flatMap(_._2).reduceOption((x, y) => math.min(x, y))
+        .map(_.toFloat) }, weak)
+  }
+
+  test("pOOBAH p-values equal a driver-side brute force on every row") {
+    val cells = parityCells
+    val df = cells.toDF()
+    for (neg <- Seq(true, false)) {
+      val (want, weak) = brutePoobah(cells, neg)
+      assert(weak == Set(("s3", "G"), ("s3", "R")),
+        s"fixture: only s3 may be weak (negControls=$neg)")
+      val (withP, _) = Prep.poobah(spark, df, noMasks,
+        useNegativeControls = neg)
+      assert(withP.columns.toSeq == Seq("sample_label", "probe_id",
+        "inf_type", "channel", "probe_type", "mask_info", "meth_g",
+        "meth_r", "unmeth_g", "unmeth_r", "p_value"))
+      val got = withP.select($"sample_label", $"probe_id", $"p_value")
+        .as[(String, String, Option[Float])].collect()
+      withP.unpersist()
+      assert(got.map(g => (g._1, g._2)).sorted.toSeq ==
+        cells.map(c => (c.sample_label, c.probe_id)).sorted)
+      got.foreach { case (s, p, pv) =>
+        assert(pv === want((s, p)), s"($s, $p) negControls=$neg")
+      }
+      // the legs the fixture exists for are really exercised
+      assert(got.filter(_._2 == "cg_dup").map(_._3).distinct.length == 1)
+      assert(got.exists(g => g._2 == "cg_null" && g._3.isEmpty))
+      assert(got.exists(g => g._1 == "s3" && g._3.exists(_ > 0.5f)))
+    }
   }
 }
