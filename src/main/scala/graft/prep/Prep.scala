@@ -500,27 +500,29 @@ object Prep {
     * channel-query union, no sort of the queries, no driver state. The
     * 0..999 prior needs no data at all: its ECDF is the closed form
     * clamp(floor(v)+1, 0, 1000)/1000. Rows that repeat a (sample, probe)
-    * key all carry the key's minimum p, taken by a window that rides the
-    * signal's (sample_label, probe_id) hash partitioning.
+    * key all carry the key's minimum p, taken by a window over the
+    * joined rows (no group-by, no join back).
     *
     * Output columns: `sample_label`, `probe_id`, the signal's other
     * columns in order, then `p_value` (FLOAT).
     *
+    * Broadcast versus shuffle for the background join is Spark's own
+    * choice (AQE and `autoBroadcastJoinThreshold`). AQE plans the join
+    * before it knows the aggregate's size, so the signal moves once, by
+    * sample_label, even when the join then becomes a broadcast; the
+    * (sample_label, probe_id) window rides that partitioning and adds no
+    * exchange (PrepSpec pins both plans). The join and the window thus
+    * run at most one task per sample.
+    *
     * Cache points (mirrors [[graft.dm.Dm.computeDmr]]), each filled by
-    * an eager count, so this method runs three Spark jobs:
+    * an eager count, so this method runs two Spark jobs of its own:
     *   - the signal, which has several readers here (the non-unique
     *     mask, the masked→oob background and the join); on a derived
     *     signal each would otherwise recompute the whole upstream
     *     lineage;
-    *   - the per-sample background arrays: once materialized, the join
-    *     is planned from their real size, so a background under the
-    *     broadcast threshold is broadcast and the signal keeps its
-    *     (sample_label, probe_id) partitioning, with no exchange before
-    *     the window; a larger one is shuffle-joined;
     *   - the RESULT, which feeds both returned values.
-    * The signal and background caches are dropped before returning.
-    * Call `.unpersist()` on the returned frame when the pipeline no
-    * longer needs it. */
+    * The signal cache is dropped before returning. Call `.unpersist()`
+    * on the returned frame when the pipeline no longer needs it. */
   def poobah(spark: SparkSession, signal: DataFrame, masks: DataFrame,
       useNegativeControls: Boolean = true, threshold: Double = 0.05)
       : (DataFrame, DataFrame) = {
@@ -544,20 +546,17 @@ object Prep {
     val bgArr = Ecdf.sortedBackground(bg, Seq("sample_label"),
       "bg_g" -> when(col("channel") === "G", col("value")),
       "bg_r" -> when(col("channel") === "R", col("value")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fill it now: left to AQE, the join's static plan over-estimates
-    // the aggregate and shuffles the whole signal by sample_label
-    // before converting to a broadcast
-    bgArr.count()
 
     // per channel: the max in-band signal against that channel's
     // background; weak-background channels (sum ≤ 100) switch to the
-    // 0..999 prior
+    // 0..999 prior. A null maximum stays null: `greatest` skips nulls,
+    // so the prior would otherwise turn it into p = 1.
     def channelP(ch: String, m: String, u: String): Column = {
       val v = greatest(col(m), col(u)).cast("double")
-      when(coalesce(col(s"bg_${ch}_sum") <= 100, lit(false)),
-        lit(1.0) - least(greatest(floor(v) + 1, lit(0.0)), lit(1000.0)) /
-          1000.0)
+      when(v.isNull, lit(null).cast("double"))
+        .when(coalesce(col(s"bg_${ch}_sum") <= 100, lit(false)),
+          lit(1.0) - least(greatest(floor(v) + 1, lit(0.0)), lit(1000.0)) /
+            1000.0)
         .otherwise(lit(1.0) - Ecdf.ecdf(
           col(s"bg_${ch}_sorted"), col(s"bg_${ch}_n"), v))
     }
@@ -572,7 +571,6 @@ object Prep {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     withP.count() // materialize: signal lineage + ECDF run exactly once
     sigP.unpersist(blocking = false)
-    bgArr.unpersist(blocking = false)
     (withP, Masks.maskPoobah(withP, threshold))
   }
 }

@@ -150,12 +150,14 @@ object ExtraQ {
       WHERE l_orderkey % 100 = 0
       ORDER BY l_orderkey, line_no, metric, v"""))
 
-  /** A18 — the distributed ECDF lookup (operators.Ecdf, the pOOBAH
-    * scale path: one sorted background array per group, an equi-join and
-    * a binary search per query) against a correlated-count oracle: F(v) =
+  /** A18 — the generic ECDF-lookup operator (operators.Ecdf.ecdfLookup:
+    * one sorted background array per group, an equi-join and a binary
+    * search per query) against a correlated-count oracle: F(v) =
     * #(background ≤ v)/n per group, right-continuous. count/n is an
     * integer ratio in double — bit-identical across engines, so no
-    * rounding is needed. */
+    * rounding is needed. Prep.poobah does not call ecdfLookup: it builds
+    * its own per-sample join from the same two pieces (sortedBackground,
+    * ecdf), and q59 and PrepSpec check that path. */
   val q48 = Q(
     "q48_ecdf_lookup",
     (s, d) => {

@@ -4,6 +4,13 @@ import graft.SparkSpec
 import graft.core.{Masks, Schemas}
 import graft.functions.StatFuncs
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 
 /** One signal row of the pOOBAH parity fixture (the signal schema). */
@@ -202,8 +209,9 @@ class PrepSpec extends SparkSpec {
 
   /** pOOBAH parity fixture: s1 and s2 have different backgrounds, s3 is
     * weak (both channels sum ≤ 100, so the 0..999 prior applies). s1
-    * repeats (s1, cg_dup) with different signal, s2 has null in-band
-    * cells, and cg_nu is a non-unique-masked type-I probe whose huge
+    * repeats (s1, cg_dup) with different signal, s2 and s3 have null
+    * in-band cells (an all-null row in weak s3 must stay null, not take
+    * the prior), and cg_nu is a non-unique-masked type-I probe whose huge
     * out-of-band cells must leave the background. */
   private def parityCells: Seq[PoobahCell] = {
     val r = lcg(7L)
@@ -226,6 +234,8 @@ class PrepSpec extends SparkSpec {
         PoobahCell("s1", "cg_dup", "I", "G", "cg", "", Some(5000f),
           Some(150f), Some(4000f), Some(390f)),
         PoobahCell("s2", "cg_null", "II", null, "cg", "", None, None, None,
+          None),
+        PoobahCell("s3", "cg_null", "II", null, "cg", "", None, None, None,
           None),
         PoobahCell("s2", "cg_half", "I", "G", "cg", "", None, Some(500f),
           Some(4000f), None),
@@ -281,30 +291,81 @@ class PrepSpec extends SparkSpec {
         .map(_.toFloat) }, weak)
   }
 
+  /** Run `body` with broadcast joins allowed (the session default) or
+    * off, which forces the shuffled join a background over the
+    * broadcast threshold gets at scale. */
+  private def withBroadcast[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, if (on) prev else "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
   test("pOOBAH p-values equal a driver-side brute force on every row") {
     val cells = parityCells
     val df = cells.toDF()
-    for (neg <- Seq(true, false)) {
+    for (neg <- Seq(true, false); broadcast <- Seq(true, false)) {
+      val leg = s"negControls=$neg broadcast=$broadcast"
       val (want, weak) = brutePoobah(cells, neg)
       assert(weak == Set(("s3", "G"), ("s3", "R")),
-        s"fixture: only s3 may be weak (negControls=$neg)")
-      val (withP, _) = Prep.poobah(spark, df, noMasks,
-        useNegativeControls = neg)
-      assert(withP.columns.toSeq == Seq("sample_label", "probe_id",
-        "inf_type", "channel", "probe_type", "mask_info", "meth_g",
-        "meth_r", "unmeth_g", "unmeth_r", "p_value"))
-      val got = withP.select($"sample_label", $"probe_id", $"p_value")
-        .as[(String, String, Option[Float])].collect()
-      withP.unpersist()
+        s"fixture: only s3 may be weak ($leg)")
+      val got = withBroadcast(broadcast) {
+        val (withP, _) = Prep.poobah(spark, df, noMasks,
+          useNegativeControls = neg)
+        assert(withP.columns.toSeq == Seq("sample_label", "probe_id",
+          "inf_type", "channel", "probe_type", "mask_info", "meth_g",
+          "meth_r", "unmeth_g", "unmeth_r", "p_value"))
+        try withP.select($"sample_label", $"probe_id", $"p_value")
+          .as[(String, String, Option[Float])].collect()
+        finally withP.unpersist()
+      }
       assert(got.map(g => (g._1, g._2)).sorted.toSeq ==
         cells.map(c => (c.sample_label, c.probe_id)).sorted)
       got.foreach { case (s, p, pv) =>
-        assert(pv === want((s, p)), s"($s, $p) negControls=$neg")
+        assert(pv === want((s, p)), s"($s, $p) $leg")
       }
       // the legs the fixture exists for are really exercised
       assert(got.filter(_._2 == "cg_dup").map(_._3).distinct.length == 1)
-      assert(got.exists(g => g._2 == "cg_null" && g._3.isEmpty))
+      assert(got.exists(g => g._1 == "s2" && g._2 == "cg_null" &&
+        g._3.isEmpty))
+      assert(got.exists(g => g._1 == "s3" && g._2 == "cg_null" &&
+        g._3.isEmpty))
       assert(got.exists(g => g._1 == "s3" && g._3.exists(_ > 0.5f)))
+    }
+  }
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  test("pOOBAH joins the background once; its window adds no shuffle") {
+    val df = parityCells.toDF()
+    for (broadcast <- Seq(true, false)) withBroadcast(broadcast) {
+      val (withP, _) = Prep.poobah(spark, df, noMasks)
+      // the plan that filled withP's cache, through its AQE stages but
+      // not into the caches it reads
+      val exec = aqe.collect(withP.queryExecution.executedPlan) {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan }.head
+      withP.unpersist()
+      val joins = aqe.collect(exec) {
+        case j: BaseJoinExec if j.leftKeys.map(_.sql) == Seq("sample_label")
+          => j }
+      assert(joins.nonEmpty, s"no join on sample_label alone\n$exec")
+      val join = joins.head
+      def shuffles(p: SparkPlan) =
+        aqe.collect(p) { case e: ShuffleExchangeExec => e }
+      val background = shuffles(join.right)
+      // the signal's path: the window, the join and the signal side
+      val signalKeys = shuffles(exec).filterNot(e =>
+        background.exists(_ eq e)).map(_.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.map(_.sql)
+          case other => Seq(other.toString)
+        })
+      assert(join.isInstanceOf[BroadcastHashJoinExec] == broadcast,
+        s"broadcast=$broadcast\n$exec")
+      // the signal moves at most by sample_label, for the join (AQE may
+      // plan that shuffle before it turns the join into a broadcast):
+      // the (sample_label, probe_id) window adds no exchange of its own
+      assert(signalKeys.forall(_ == Seq("sample_label")),
+        s"broadcast=$broadcast: signal shuffles $signalKeys\n$exec")
     }
   }
 }
