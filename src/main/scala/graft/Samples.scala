@@ -147,7 +147,7 @@ final case class Samples(
     val (updated, failed) = Prep.inferType1Channel(signal, switchFailed,
       maskFailed)
     val s2 = copy(signal = step(updated))
-    if (maskFailed) s2.withMask(failed) else s2
+    failed.fold(s2)(s2.withMask)
   }
 
   /** A7 — the summary the reference prints after every

@@ -8,9 +8,22 @@ import org.apache.spark.sql.functions._
   * sample (`sample_label` set) or all samples (`sample_label` null).
   * Masking NULLS the signal cells — it does not remove rows (M1).
   *
-  * The mask table is a DataFrame [mask_name, sample_label, probe_id]; all
-  * algebra (add/override, union-dedup, remove, count — mask.py:46-194) is
-  * plain relational ops, and application is one left join.
+  * The layout is owned here: a mask table is a DataFrame
+  * [mask_name, sample_label, probe_id], and every builder in the engine
+  * (M2-M6 below, `SignalBuilder.minBeadsMask`, the failed-type-I mask,
+  * dye-bias NL, Sesame) writes it through [[of]]. The algebra
+  * (add/override, remove, count — mask.py:46-194) is plain relational
+  * ops. [[applyMask]] collapses the table to one row per probe and
+  * broadcast-joins it to the signal ONCE.
+  *
+  * A mask is a probe set, not a row predicate: one matching row masks
+  * every row of its probe_id, in every sample for a global mask.
+  * `SignalBuilder.build` keys rows by (sample, probe_id, inf_type,
+  * channel, probe_type), so one probe_id can carry two rows and a
+  * predicate on the row's own columns (say, `mask_info`) may match only
+  * one of them. A `Column` form of the builders would leave the other
+  * row unmasked, and closing it over the probe_id across samples needs
+  * the shuffle by probe_id the join already avoids.
   */
 object Masks {
 
@@ -65,32 +78,42 @@ object Masks {
     masks.groupBy("mask_name", "sample_label")
       .agg(countDistinct("probe_id").as("n_probes"))
 
+  /** The one constructor of a mask: `rows` carries `probe_id`, plus
+    * `sample_label` when the mask is sample-scoped; without it the mask
+    * is global (null label). Rows pass through as given — a builder that
+    * wants a probe set takes its own `distinct`. */
+  def of(name: String, rows: DataFrame): DataFrame = {
+    val label =
+      if (rows.columns.contains("sample_label")) col("sample_label")
+      else lit(null)
+    rows.select(lit(name).as("mask_name"),
+      label.cast("string").as("sample_label"), col("probe_id"))
+  }
+
   /** M1 — apply masks to the long signal table: null the signal cells of
     * (probe, sample) pairs hit by a global or sample-scoped mask
-    * (samples.py:592-600). One left join on probe_id (mask side is the
-    * small one — broadcast) + a scope predicate; no row removal. */
+    * (samples.py:592-600). The (name-filtered) table collapses to one
+    * row per probe — any global hit, the set of scoped labels — and is
+    * broadcast-joined on probe_id once, so no row is added or removed.
+    * A signal row with a null sample_label is matched by global masks
+    * only. Columns come out as probe_id, sample_label, then the rest of
+    * the signal's in order. */
   def applyMask(signal: DataFrame, masks: DataFrame,
       maskNameFilter: Option[String] = None): DataFrame = {
     val mm = maskNameFilter.map(p => masks.filter(col("mask_name").rlike(p)))
       .getOrElse(masks)
-    // Global and sample-scoped hits joined separately so each left join
-    // stays 1:1 (distinct probe sets) — no row multiplication.
-    val hit = signal.join(
-      broadcast(mm.filter(col("sample_label").isNull)
-        .select(col("probe_id")).distinct()
-        .withColumn("g_hit", lit(true))), Seq("probe_id"), "left")
-      .join(
-        broadcast(mm.filter(col("sample_label").isNotNull)
-          .select(col("probe_id"), col("sample_label"))
-          .distinct().withColumn("s_hit", lit(true))),
-        Seq("probe_id", "sample_label"), "left")
-      .withColumn("is_masked",
-        coalesce(col("g_hit"), lit(false)) || coalesce(col("s_hit"), lit(false)))
-      .drop("g_hit", "s_hit")
-    signalCells.foldLeft(hit) { (df, c) =>
-      df.withColumn(c, when(col("is_masked"), lit(null).cast("float"))
-        .otherwise(col(c)))
-    }.drop("is_masked")
+    val perProbe = mm.groupBy("probe_id").agg(
+      max(col("sample_label").isNull).as("_m_global"),
+      collect_set("sample_label").as("_m_labels"))
+    val isMasked = coalesce(col("_m_global") ||
+      array_contains(col("_m_labels"), col("sample_label")), lit(false))
+    val keys = Seq("probe_id", "sample_label")
+    signal.join(broadcast(perProbe), Seq("probe_id"), "left")
+      .select((keys ++ signal.columns.filterNot(keys.contains)).map { c =>
+        if (signalCells.contains(c))
+          when(isMasked, lit(null).cast("float")).otherwise(col(c)).as(c)
+        else col(c)
+      }: _*)
   }
 
   // ---- Mask builders (M2-M6) ----
@@ -98,13 +121,12 @@ object Masks {
   /** M2 — probes whose manifest mask_info matches a regex
     * (samples.py:739-768: `str.contains` regex search). */
   def maskByNames(signal: DataFrame, namePattern: String,
-      maskName: String, sampleLabel: Option[String] = None): DataFrame =
-    signal.filter(col("mask_info").rlike(namePattern))
+      maskName: String, sampleLabel: Option[String] = None): DataFrame = {
+    val probes = signal.filter(col("mask_info").rlike(namePattern))
       .select("probe_id").distinct()
-      .select(lit(maskName).as("mask_name"),
-        sampleLabel.map(lit(_)).getOrElse(lit(null)).cast("string")
-          .as("sample_label"),
-        col("probe_id"))
+    of(maskName,
+      sampleLabel.fold(probes)(l => probes.withColumn("sample_label", lit(l))))
+  }
 
   /** M3 — Sesame quality / non-unique masks (annotations.py:312-340). */
   def maskQualityProbes(signal: DataFrame,
@@ -114,40 +136,31 @@ object Masks {
   def maskNonUniqueProbes(signal: DataFrame): DataFrame =
     maskByNames(signal, Schemas.nonUniqueMaskNames, "non_unique_probes")
 
+  /** Global mask of the distinct probes of `df` matching `cond`. */
+  private def probeSet(name: String, df: DataFrame, cond: Column): DataFrame =
+    of(name, df.filter(cond).select("probe_id").distinct())
+
   /** M4 — semi-join masks against the manifest: XY chromosome, controls,
     * snps, non-cg (samples.py:787-831). `manifest` carries chromosome. */
   def maskXYProbes(manifest: DataFrame): DataFrame =
-    manifest.filter(ChromNorm.mergeAltChromosomes(col("chromosome"))
-      .isin("X", "Y"))
-      .select("probe_id").distinct()
-      .select(lit("xy_probes").as("mask_name"),
-        lit(null).cast("string").as("sample_label"), col("probe_id"))
+    probeSet("xy_probes", manifest,
+      ChromNorm.mergeAltChromosomes(col("chromosome")).isin("X", "Y"))
 
   def maskControlProbes(signal: DataFrame): DataFrame =
-    signal.filter(col("probe_type") === "ctl")
-      .select("probe_id").distinct()
-      .select(lit("control_probes").as("mask_name"),
-        lit(null).cast("string").as("sample_label"), col("probe_id"))
+    probeSet("control_probes", signal, col("probe_type") === "ctl")
 
   def maskSnpProbes(signal: DataFrame): DataFrame =
-    signal.filter(col("probe_type") === "snp")
-      .select("probe_id").distinct()
-      .select(lit("snp_probes").as("mask_name"),
-        lit(null).cast("string").as("sample_label"), col("probe_id"))
+    probeSet("snp_probes", signal, col("probe_type") === "snp")
 
   /** Non-CpG mask EXCLUDES controls (samples.py:827-831: the reference
     * masks them separately under 'Control' so normalization can still
     * reach them — callers mirror that by adding [[maskControlProbes]]
     * alongside, as `Samples.maskNonCgProbes` does). */
   def maskNonCgProbes(signal: DataFrame): DataFrame =
-    signal.filter(!col("probe_type").isin("cg", "ctl"))
-      .select("probe_id").distinct()
-      .select(lit("non_cg_probes").as("mask_name"),
-        lit(null).cast("string").as("sample_label"), col("probe_id"))
+    probeSet("non_cg_probes", signal, !col("probe_type").isin("cg", "ctl"))
 
   /** M6 — pOOBAH mask: p_value ≥ threshold (samples.py:1603-1607). */
   def maskPoobah(signal: DataFrame, threshold: Double): DataFrame =
-    signal.filter(col("p_value") >= threshold)
-      .select(lit(s"poobah_$threshold").as("mask_name"),
-        col("sample_label"), col("probe_id"))
+    of(s"poobah_$threshold", signal.filter(col("p_value") >= threshold)
+      .select("sample_label", "probe_id"))
 }

@@ -83,9 +83,8 @@ object SignalBuilder {
   /** The bootstrap min-beads mask (samples.py:568-570): per sample, probes
     * whose (G,M) or (R,U) cell is null. */
   def minBeadsMask(signal: DataFrame, minBeads: Int): DataFrame =
-    signal.filter(col("meth_g").isNull || col("unmeth_r").isNull)
-      .select(lit(s"min_beads_$minBeads").as("mask_name"),
-        col("sample_label"), col("probe_id"))
+    Masks.of(s"min_beads_$minBeads",
+      signal.filter(col("meth_g").isNull || col("unmeth_r").isNull))
 
   // -------------------- derived matrices --------------------
 

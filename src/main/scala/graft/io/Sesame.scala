@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.core.Masks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,9 +72,7 @@ object Sesame {
       lit(null).cast("float").as("p_value"))
       .dropDuplicates("sample_label", "probe_id")
 
-    val masks = joined.filter(col("mask") === true)
-      .select(lit("sesame").as("mask_name"), col("sample_label"),
-        col("probe_id"))
+    val masks = Masks.of("sesame", joined.filter(col("mask") === true))
     (signal, masks)
   }
 }

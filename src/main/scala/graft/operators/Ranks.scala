@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Global-order operators (row_number / ntile / Benjamini-Hochberg over a
   * TOTAL order) without a single-partition window.
@@ -60,41 +63,8 @@ object Ranks {
     * jobs reuse the single shuffle written by the repartition. */
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column], outCol: String,
       totalCol: Option[String] = None, numParts: Int = 0): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.types.{LongType, StructField}
-    val spark = df.sparkSession
-    val n = if (numParts > 0) numParts
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(n, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val rdd = sorted.queryExecution.toRdd
-    val counts = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var c = 0L
-      while (it.hasNext) { it.next(); c += 1 }
-      Iterator((pid, c))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val total = if (counts.isEmpty) 0L else offsets.last
-    val bOff = spark.sparkContext.broadcast(offsets)
-    val withRank = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var idx = bOff.value(pid)
-      val rankRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      // The consumer (RDDScanExec) projects each row to its own buffer
-      // before advancing, so reusing the holders is safe.
-      it.map { row =>
-        idx += 1L
-        rankRow.update(0, idx)
-        joined(row, rankRow)
-      }
-    }
-    val outSchema = sorted.schema
-      .add(StructField(outCol, LongType, nullable = false))
-    val ranked = GraftBridge.internalCreateDataFrame(
-      spark, withRank.asInstanceOf[org.apache.spark.rdd.RDD[InternalRow]],
-      outSchema)
+    val (ranked, total) = scan(df, sortCols, outCol, numParts,
+      exclusive = false)(_ => 1L)
     totalCol.fold(ranked)(t => ranked.withColumn(t, lit(total)))
   }
 
@@ -175,45 +145,52 @@ object Ranks {
   def withGlobalPrefixSum(df: DataFrame, sortCols: Seq[Column],
       valueCol: String, outCol: String, exclusive: Boolean = false,
       numParts: Int = 0): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.types.{LongType, StructField}
+    val vIdx = df.schema.fieldIndex(valueCol)
+    require(df.schema(vIdx).dataType == LongType,
+      s"withGlobalPrefixSum needs $valueCol as LongType")
+    scan(df, sortCols, outCol, numParts, exclusive)(row =>
+      if (row.isNullAt(vIdx)) 0L else row.getLong(vIdx))._1
+  }
+
+  /** The zipWithIndex scan behind [[withGlobalRank]] and
+    * [[withGlobalPrefixSum]]: range-repartition on `sortCols` into
+    * `numParts` partitions (0: the shuffle partition count), sort within
+    * them, and attach the running sum of `inc(row)` as LongType `outCol`,
+    * through the current row or, if `exclusive`, before it. One `toRdd`
+    * instance feeds the per-partition total job (eager) and the attach
+    * map. Returns the frame and the grand total. */
+  private def scan(df: DataFrame, sortCols: Seq[Column], outCol: String,
+      numParts: Int, exclusive: Boolean)(
+      inc: InternalRow => Long): (DataFrame, Long) = {
     val spark = df.sparkSession
     val n = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
     val sorted = df.repartitionByRange(n, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    require(sorted.schema(vIdx).dataType == LongType,
-      s"withGlobalPrefixSum needs $valueCol as LongType")
     val rdd = sorted.queryExecution.toRdd
-    val partSums = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val partTotals = rdd.mapPartitionsWithIndex { (pid, it) =>
       var s = 0L
-      while (it.hasNext) {
-        val r = it.next()
-        if (!r.isNullAt(vIdx)) s += r.getLong(vIdx)
-      }
+      while (it.hasNext) s += inc(it.next())
       Iterator((pid, s))
     }.collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
+    val offsets = partTotals.scanLeft(0L)(_ + _)
     val bOff = spark.sparkContext.broadcast(offsets)
-    val withSum = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val withOut = rdd.mapPartitionsWithIndex { (pid, it) =>
       var acc = bOff.value(pid)
-      val sumRow = new GenericInternalRow(1)
+      val outRow = new GenericInternalRow(1)
       val joined = new JoinedRow
-      it.map { row =>
-        val v = if (row.isNullAt(vIdx)) 0L else row.getLong(vIdx)
-        val out = if (exclusive) acc else acc + v
-        acc += v
-        sumRow.update(0, out)
-        joined(row, sumRow)
+      // The consumer (RDDScanExec) projects each row to its own buffer
+      // before advancing, so reusing the holders is safe.
+      it.map[InternalRow] { row =>
+        val before = acc
+        acc += inc(row)
+        outRow.update(0, if (exclusive) before else acc)
+        joined(row, outRow)
       }
     }
     val outSchema = sorted.schema
       .add(StructField(outCol, LongType, nullable = false))
-    GraftBridge.internalCreateDataFrame(spark,
-      withSum.asInstanceOf[org.apache.spark.rdd.RDD[InternalRow]],
-      outSchema)
+    (GraftBridge.internalCreateDataFrame(spark, withOut, outSchema),
+      offsets.last)
   }
 }

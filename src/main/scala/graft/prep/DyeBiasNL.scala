@@ -1,5 +1,6 @@
 package graft.prep
 
+import graft.core.Masks
 import graft.functions.StatFuncs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -219,12 +220,10 @@ object DyeBiasNL {
         if (valueCols.contains(c)) col(c).cast("float").as(c)
         else col(c)): _*)
 
-    val maskRows = t1.filter(col("channel") === "G")
+    val maskRows = Masks.of("dye bias nl", t1.filter(col("channel") === "G")
       .select("probe_id").distinct()
       .crossJoin(broadcast(
-        distortedDf.filter(col("_distorted")).select("sample_label")))
-      .select(lit("dye bias nl").as("mask_name"), col("sample_label"),
-        col("probe_id"))
+        distortedDf.filter(col("_distorted")).select("sample_label"))))
     (corrected, maskRows)
   }
 }

@@ -109,9 +109,9 @@ object Prep {
     * Failed probes (max below the 95th percentile of the opposite-channel
     * background, or any NA) keep the manifest channel unless
     * `switchFailed`; `maskFailed` additionally returns a mask for them.
-    * Returns (updated signal, failed-probe mask rows). */
+    * Returns (updated signal, failed-probe mask if `maskFailed`). */
   def inferType1Channel(signal: DataFrame, switchFailed: Boolean = false,
-      maskFailed: Boolean = false): (DataFrame, DataFrame) = {
+      maskFailed: Boolean = false): (DataFrame, Option[DataFrame]) = {
     val flagged = flagType1Channels(signal, switchFailed)
     val updated = signal
       .join(broadcast(flagged.select("probe_id", "new_channel")),
@@ -121,15 +121,8 @@ object Prep {
           col("new_channel")).otherwise(col("channel")))
       .drop("new_channel")
 
-    val failedMask =
-      if (maskFailed)
-        flagged.filter(col("failed"))
-          .select(lit("failed_probes_inferTypeI").as("mask_name"),
-            lit(null).cast("string").as("sample_label"), col("probe_id"))
-      else flagged.filter(lit(false))
-        .select(lit("x").as("mask_name"),
-          lit(null).cast("string").as("sample_label"), col("probe_id"))
-    (updated, failedMask)
+    (updated, Option.when(maskFailed)(
+      Masks.of("failed_probes_inferTypeI", flagged.filter(col("failed")))))
   }
 
   /** Per-type-I-probe channel-inference frame shared by
@@ -344,13 +337,23 @@ object Prep {
     finally if (owned) sigP.unpersist(blocking = false)
   }
 
-  private def noobFitsPinned(signal: DataFrame, masks: DataFrame,
-      useNegativeControls: Boolean): Seq[NoobFit] = {
+  /** The signal with `masks` plus the non-unique mask applied (the
+    * non-unique mask overrides a same-named one in `masks`), and its
+    * background cells: out-of-band, plus the negative controls when
+    * `useNegativeControls`. Shared by NOOB and pOOBAH. */
+  private def maskedBackground(signal: DataFrame, masks: DataFrame,
+      useNegativeControls: Boolean): (DataFrame, DataFrame) = {
     val masked = Masks.applyMask(signal,
       Masks.addMask(masks, Masks.maskNonUniqueProbes(signal)))
-    val bgCells0 = oobCells(masked)
-    val bgCells = if (useNegativeControls)
-      bgCells0.unionByName(negControlCells(masked)) else bgCells0
+    val bg = oobCells(masked)
+    (masked,
+      if (useNegativeControls) bg.unionByName(negControlCells(masked)) else bg)
+  }
+
+  private def noobFitsPinned(signal: DataFrame, masks: DataFrame,
+      useNegativeControls: Boolean): Seq[NoobFit] = {
+    val (masked, bgCells) =
+      maskedBackground(signal, masks, useNegativeControls)
     val fgCells = ibCells(masked)
 
     def zeroToOne(cells: DataFrame): DataFrame =
@@ -538,11 +541,7 @@ object Prep {
     val sigP = signal.repartition(nPart, col("sample_label"), col("probe_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sigP.count()
-    val masked = Masks.applyMask(sigP,
-      Masks.addMask(masks, Masks.maskNonUniqueProbes(sigP)))
-    val bg0 = oobCells(masked)
-    val bg = if (useNegativeControls)
-      bg0.unionByName(negControlCells(masked)) else bg0
+    val (_, bg) = maskedBackground(sigP, masks, useNegativeControls)
     val bgArr = Ecdf.sortedBackground(bg, Seq("sample_label"),
       "bg_g" -> when(col("channel") === "G", col("value")),
       "bg_r" -> when(col("channel") === "R", col("value")))

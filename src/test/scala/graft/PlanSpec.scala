@@ -1,6 +1,9 @@
 package graft
 
 import graft.queries.{IntervalQ, Relational}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions — the scale properties the engine is designed
@@ -361,5 +364,24 @@ class PlanSpec extends SparkSpec {
       }.size).sum
     }.sum
     assert(kernels == 1, opt.treeString)
+  }
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  test("applyMask joins the mask side once, as a broadcast hash join") {
+    import spark.implicits._
+    val sig = Seq(("s1", "cg1"), ("s2", "cg1"), ("s2", "cg2"))
+      .toDF("sample_label", "probe_id")
+      .select($"sample_label", $"probe_id", lit(1f).as("meth_g"),
+        lit(2f).as("meth_r"), lit(3f).as("unmeth_g"),
+        lit(4f).as("unmeth_r"), lit(0.5f).as("p_value"))
+    val masks = Seq(("g", null: String, "cg1"), ("sc", "s2", "cg2"))
+      .toDF("mask_name", "sample_label", "probe_id")
+    val df = graft.core.Masks.applyMask(sig, masks)
+    df.collect() // finalize the AQE plan
+    val p = df.queryExecution.executedPlan
+    val joins = aqe.collect(p) { case j: BaseJoinExec => j }
+    assert(joins.size == 1, p.toString)
+    assert(joins.head.isInstanceOf[BroadcastHashJoinExec], p.toString)
   }
 }

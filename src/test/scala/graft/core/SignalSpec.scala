@@ -135,6 +135,127 @@ class SignalSpec extends SparkSpec {
     assert(Masks.addMask(other, m2).count() == 2)
   }
 
+  // ---- mask table queries and applyMask, on hand-built frames ----
+
+  private def maskTable(rows: (String, String, String)*): DataFrame =
+    rows.toDF("mask_name", "sample_label", "probe_id")
+
+  /** Signal rows (sample_label, probe_id, channel, mask_info), every one
+    * with cells meth_g..p_value = 1, 2, 3, 4, 0.5. */
+  private def cells(rows: (String, String, String, String)*): DataFrame =
+    rows.map { case (s, p, ch, info) =>
+      (s, p, "I", ch, "cg", info, 1f, 2f, 3f, 4f, 0.5f)
+    }.toDF("sample_label", "probe_id", "inf_type", "channel", "probe_type",
+      "mask_info", "meth_g", "meth_r", "unmeth_g", "unmeth_r", "p_value")
+
+  /** Per row, sorted: (sample_label, probe_id, channel, state), state
+    * "masked" (all five cells null), "kept" (cells as [[cells]] wrote
+    * them) or "partial". */
+  private def cellState(df: DataFrame)
+      : Seq[(Option[String], String, String, String)] =
+    df.collect().map { r =>
+      val vs = Masks.signalCells.map(c =>
+        Option(r.getAs[java.lang.Float](c)).map(_.floatValue))
+      val state =
+        if (vs.forall(_.isEmpty)) "masked"
+        else if (vs == Seq(1f, 2f, 3f, 4f, 0.5f).map(Some(_))) "kept"
+        else "partial"
+      (Option(r.getAs[String]("sample_label")), r.getAs[String]("probe_id"),
+        r.getAs[String]("channel"), state)
+    }.toSeq.sorted
+
+  private def probes(df: DataFrame): Seq[String] =
+    df.as[String].collect().toSeq.sorted
+
+  private def counts(masks: DataFrame): Set[(String, Option[String], Long)] =
+    Masks.maskCounts(masks).collect().map(r =>
+      (r.getString(0), Option(r.getString(1)), r.getLong(2))).toSet
+
+  test("maskedProbes/maskCounts: a global mask, distinct probes") {
+    val masks = maskTable(("g", null, "cg1"), ("g", null, "cg2"),
+      ("g", null, "cg2"))
+    assert(probes(Masks.maskedProbes(masks, "s1")) == Seq("cg1", "cg2"))
+    assert(probes(Masks.maskedProbes(masks, "s9")) == Seq("cg1", "cg2"))
+    assert(counts(masks) == Set(("g", None, 2L)))
+  }
+
+  test("maskedProbes/maskCounts: a scoped mask counts in its own sample") {
+    val masks = maskTable(("g", null, "cg1"), ("sc", "s1", "cg3"),
+      ("sc", "s1", "cg1"), ("sc", "s2", "cg4"))
+    assert(probes(Masks.maskedProbes(masks, "s1")) == Seq("cg1", "cg3"))
+    assert(probes(Masks.maskedProbes(masks, "s2")) == Seq("cg1", "cg4"))
+    assert(probes(Masks.maskedProbes(masks, "s9")) == Seq("cg1"))
+    assert(counts(masks) ==
+      Set(("g", None, 1L), ("sc", Some("s1"), 2L), ("sc", Some("s2"), 1L)))
+  }
+
+  test("maskedProbes/maskCounts after an override") {
+    val masks = Masks.addMask(
+      maskTable(("g", null, "cg1"), ("g", null, "cg2"), ("sc", "s1", "cg3")),
+      maskTable(("g", null, "cg4")))
+    assert(probes(Masks.maskedProbes(masks, "s1")) == Seq("cg3", "cg4"))
+    assert(counts(masks) == Set(("g", None, 1L), ("sc", Some("s1"), 1L)))
+    // a scoped mask of the same name is another key: the global one stays
+    val scoped = Masks.addMask(masks, maskTable(("g", "s1", "cg5")))
+    assert(probes(Masks.maskedProbes(scoped, "s1")) ==
+      Seq("cg3", "cg4", "cg5"))
+    assert(counts(scoped) == Set(("g", None, 1L), ("g", Some("s1"), 1L),
+      ("sc", Some("s1"), 1L)))
+  }
+
+  test("applyMask: a probe hit by a global and a scoped mask keeps one row") {
+    val sig = cells(("s1", "cg1", "G", ""), ("s2", "cg1", "G", ""),
+      ("s1", "cg2", "G", ""))
+    val masked = Masks.applyMask(sig, maskTable(("g", null, "cg1"),
+      ("sc", "s1", "cg1"), ("sc2", "s1", "cg1")))
+    assert(cellState(masked) == Seq(
+      (Some("s1"), "cg1", "G", "masked"), (Some("s1"), "cg2", "G", "kept"),
+      (Some("s2"), "cg1", "G", "masked")))
+    // probe_id, sample_label, then the signal's other columns in order
+    assert(masked.columns.toSeq == Seq("probe_id", "sample_label") ++
+      sig.columns.filterNot(Set("probe_id", "sample_label")))
+  }
+
+  test("applyMask: a scoped mask naming an absent sample masks nothing") {
+    val sig = cells(("s1", "cg1", "G", ""), ("s2", "cg1", "G", ""))
+    val masked = Masks.applyMask(sig, maskTable(("sc", "s9", "cg1")))
+    assert(cellState(masked) == Seq(
+      (Some("s1"), "cg1", "G", "kept"), (Some("s2"), "cg1", "G", "kept")))
+  }
+
+  test("applyMask: a null-sample_label row is matched by global masks only") {
+    val sig = cells((null, "cg1", "G", ""), (null, "cg2", "G", ""),
+      ("s1", "cg1", "G", ""))
+    val masked = Masks.applyMask(sig,
+      maskTable(("sc", "s1", "cg1"), ("g", null, "cg2")))
+    assert(cellState(masked) == Seq(
+      (None, "cg1", "G", "kept"), (None, "cg2", "G", "masked"),
+      (Some("s1"), "cg1", "G", "masked")))
+  }
+
+  test("applyMask: maskNameFilter selects masks before they apply") {
+    val sig = cells(("s1", "cg1", "G", ""), ("s1", "cg2", "G", ""),
+      ("s1", "cg3", "G", ""))
+    val masks = maskTable(("poobah_0.05", "s1", "cg1"),
+      ("non_unique_probes", null, "cg2"), ("poobah_0.01", null, "cg3"))
+    assert(cellState(Masks.applyMask(sig, masks, Some("^poobah"))) == Seq(
+      (Some("s1"), "cg1", "G", "masked"), (Some("s1"), "cg2", "G", "kept"),
+      (Some("s1"), "cg3", "G", "masked")))
+  }
+
+  test("applyMask: a non-unique hit on one row masks every row of the probe") {
+    // one probe_id, two rows per sample (channels differ); only the G
+    // row's mask_info matches, but the mask is a probe set
+    val sig = cells(("s1", "cg_dup", "G", "M_nonuniq"),
+      ("s1", "cg_dup", "R", ""), ("s2", "cg_dup", "R", ""),
+      ("s1", "cg1", "G", ""))
+    val masked = Masks.applyMask(sig, Masks.maskNonUniqueProbes(sig))
+    assert(cellState(masked) == Seq(
+      (Some("s1"), "cg1", "G", "kept"), (Some("s1"), "cg_dup", "G", "masked"),
+      (Some("s1"), "cg_dup", "R", "masked"),
+      (Some("s2"), "cg_dup", "R", "masked")))
+  }
+
   test("probe-suffix removal merges duplicates by mean") {
     val betas = Seq(
       ("s1", "cg9_TC12", Some(0.2f)), ("s1", "cg9_BC21", Some(0.4f)),
