@@ -17,6 +17,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *         [start, end] intervals — time the cluster actually ran;
   *       - gap: wall − jobSec — pure driver time (analysis, optimization,
   *         AQE re-planning, job submission latency);
+  *       - maxExec: the SQL execution that ran the most of the query's
+  *         jobs and how many (`rdd` for RDD-API jobs outside any);
   *       - the counted plan's tracker phases (parse/analysis/optimization/
   *         planning) — the first-plan cost only; AQE re-plans between
   *         stages are not in the tracker and land in `gap`.
@@ -31,7 +33,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Queries read SPARK_GRAFT_SF_DIR (default sf0.1); the untimed warmup
   * (codegen/JIT once per query shape, like Bench) reads
-  * SPARK_GRAFT_WARM_DIR (default sf0.01).
+  * SPARK_GRAFT_WARM_DIR (default sf0.01) and then registers the timed
+  * directory's `Q.t` views, so no timed construction pays a first read.
   *
   *   sbt "runMain graft.Profile driver q122_pq_adc_topk,q71_dmr_endtoend"
   *   sbt "runMain graft.Profile stages q59_poobah_slice /root/testdata/sf0.1"
@@ -74,13 +77,17 @@ object Profile {
   }
 
   /** Runs `names` once, untimed, at `warmDir` (codegen/JIT once per
-    * query shape), then `f` with a trace attached. */
+    * query shape), registers the `Q.t` view of every table in `sfDir`,
+    * then runs `f` with a trace attached. */
   private def traced(spark: SparkSession, names: Seq[String],
-      warmDir: String)(f: Trace => Unit): Unit = {
+      warmDir: String, sfDir: String)(f: Trace => Unit): Unit = {
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
       catch { case _: Throwable => () }
     }
+    Option(new java.io.File(sfDir).list()).toSeq.flatten
+      .filter(_.endsWith(".parquet"))
+      .foreach(f => Q.t(spark, sfDir, f.stripSuffix(".parquet")))
     spark.catalog.clearCache(); System.gc()
     val trace = Trace.attach(spark)
     try f(trace) finally trace.detach()
@@ -91,8 +98,8 @@ object Profile {
     import org.apache.spark.sql.catalyst.QueryPlanningTracker._
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.forall(_.contains(n)))
-    traced(spark, names, warmDir) { trace =>
-      println("query                                   wall  constr  action   jobs  jobSec    gap   parse   analy   optim    plan")
+    traced(spark, names, warmDir, sfDir) { trace =>
+      println("query                                   wall  constr  action   jobs  jobSec    gap   parse   analy   optim    plan  maxExec")
       var tWall = 0.0; var tJob = 0.0; var tGap = 0.0; var tConstr = 0.0
       val rows = names.flatMap { name =>
         try {
@@ -110,7 +117,11 @@ object Profile {
           val gap = wall - jobSec
           val ph = df.queryExecution.tracker.phases
           def p(k: String) = ph.get(k).map(s => (s.endTimeMs - s.startTimeMs) / 1e3).getOrElse(0.0)
-          println(f"$name%-38s ${wall}%6.2f ${constr}%7.2f ${action}%7.2f ${stats.jobs}%6d ${jobSec}%7.2f ${gap}%6.2f ${p(PARSING)}%7.3f ${p(ANALYSIS)}%7.3f ${p(OPTIMIZATION)}%7.3f ${p(PLANNING)}%7.3f")
+          val maxExec = stats.jobsByExecution.maxByOption(_._2).fold("-") {
+            case (id, n) =>
+              (if (id == Trace.RddJobs) "rdd" else s"e$id") + s"=$n"
+          }
+          println(f"$name%-38s ${wall}%6.2f ${constr}%7.2f ${action}%7.2f ${stats.jobs}%6d ${jobSec}%7.2f ${gap}%6.2f ${p(PARSING)}%7.3f ${p(ANALYSIS)}%7.3f ${p(OPTIMIZATION)}%7.3f ${p(PLANNING)}%7.3f  $maxExec%7s")
           tWall += wall; tJob += jobSec; tGap += gap; tConstr += constr
           spark.catalog.clearCache(); System.gc()
           Some((name, wall, gap))
@@ -128,7 +139,7 @@ object Profile {
 
   private def stages(spark: SparkSession, name: String, sfDir: String,
       warmDir: String): Unit = {
-    traced(spark, Seq(name), warmDir) { trace =>
+    traced(spark, Seq(name), warmDir, sfDir) { trace =>
       val tag = s"profile-$name"
       spark.sparkContext.setJobDescription(s"profile: $name")
       val t0 = System.nanoTime()

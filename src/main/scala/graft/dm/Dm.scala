@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Differential methylation (SURVEY.md §2.11 L1/L3/L4/A14; reference
   * pylluminator/dm.py).
@@ -20,8 +21,13 @@ import org.apache.spark.sql.types._
   * fall back to a per-probe pinv on the non-missing rows (dm.py:60).
   *
   * DMR: genome-ordered windows (W1-W4) → change points → running segment
-  * ids → per-segment aggregation with Stouffer-combined p-values (A14),
-  * all shuffling only twice (the genome sort, the segment groupBy).
+  * ids → per-segment aggregation with Stouffer-combined p-values (A14).
+  * The genome axis is windowed per (chromosome, block); the few values
+  * per block that stitch neighbouring blocks are collected and folded on
+  * the driver, then joined back as local relations.
+  *
+  * Both end in Benjamini-Hochberg per factor, one range-shuffle scan each
+  * ([[graft.operators.Ranks.bhAdjust]]).
   */
 object Dm {
 
@@ -312,12 +318,10 @@ object Dm {
           .withColumn(s"${f}_estimate", element_at(col("fit"), 5 + 4 * i))
           .withColumn(s"${f}_std_err", element_at(col("fit"), 6 + 4 * i))
     }
-    // Folding adjustBH multiplies the plan: each call references its
-    // input from three branches (rank, counts, null-passthrough), so k
-    // factors analyze the upstream lineage 3^k times — localCheckpoint
-    // truncates it to a leaf first (the per-probe stats frame is the
-    // natural materialization point; caching alone does NOT shrink the
-    // LOGICAL plan the analyzer walks).
+    // Each adjustBH range-partitions its input, and the range sampler's
+    // job evaluates that input before the shuffle does: on the lazy fit
+    // every per-probe regression would run twice. The checkpoint runs
+    // the fit once; each later factor reads the previous scan's output.
     val statsBase = withCols.drop("fit").localCheckpoint()
     sanitized.foldLeft(statsBase) { (df, f) =>
       adjustBH(df, s"${f}_p_value", s"${f}_p_value_adjusted")
@@ -408,8 +412,8 @@ object Dm {
   /** L3/W7 — Benjamini-Hochberg adjustment over the non-null p-values
     * (dm.py:475-477): rank ascending, monotone cumulative min of p·n/rank
     * from the largest rank, capped at 1. Delegates to
-    * [[graft.operators.Ranks.bhAdjust]], the distributed rank +
-    * suffix-min scan (no single-partition window; tie order cannot change
+    * [[graft.operators.Ranks.bhAdjust]], one scan over a p-descending
+    * range shuffle (no single-partition window; tie order cannot change
     * the adjusted values, so no tiebreaker column is needed). */
   def adjustBH(df: DataFrame, pCol: String, outCol: String): DataFrame =
     graft.operators.Ranks.bhAdjust(df, pCol, outCol)
@@ -468,14 +472,16 @@ object Dm {
     // superlinearly at 10× scale (measured 2.56× on a chr1-heavy
     // census). Blocks parallelize the genome axis evenly; everything
     // that crosses a block boundary is per-BLOCK information (one row
-    // per ~blockSize of genome — a KB-scale frame):
-    //   - each block's FIRST vec stitches the previous block's lead;
-    //   - each block's LAST change_point stitches the next block's lag;
-    //   - per-block flag totals become running-offset prefixes.
-    // Those tiny frames are windowed per chromosome (trivially small)
-    // and broadcast back, so segment ids are IDENTICAL to the
-    // single-window-per-chromosome plan — blocks are internal blocking,
-    // never segment boundaries.
+    // per ~blockSize of genome — a KB-scale frame), collected twice and
+    // folded on the driver:
+    //   - each block's last key and FIRST vec (the previous block's
+    //     lead) — the chromosome index comes from the same rows;
+    //   - after the cutoff, each block's LAST change_point (the next
+    //     block's lag) and its change points before the last row (the
+    //     running-offset prefix).
+    // Both are joined back as broadcasts of local relations (no job),
+    // so segment ids are IDENTICAL to the single-window-per-chromosome
+    // plan — blocks are internal blocking, never segment boundaries.
     val samplesOrdered = betas.select("sample_label").distinct()
       .collect().map(_.getString(0)).sorted
     val vec = array(samplesOrdered.map(s =>
@@ -484,29 +490,40 @@ object Dm {
     val keyStruct = struct(ord: _*)
     val wb = Window.partitionBy(col("chromosome"), col("_blk"))
       .orderBy(ord: _*)
-    val wChromBlocks = Window.partitionBy(col("chromosome"))
-      .orderBy(col("_blk"))
+    val blockKey = Seq("chromosome", "_blk")
+    def perBlock(df: DataFrame): Array[Row] = df.collect()
+      .sortBy(r => (r.getString(0), r.getLong(1)))
+    def local(rows: Seq[Row], fields: StructField*): DataFrame =
+      broadcast(betas.sparkSession.createDataFrame(rows.asJava,
+        StructType(StructField("chromosome", StringType) +:
+          StructField("_blk", LongType) +: fields)))
     // cache point: `blocked` (the full betas-pivot prefix) feeds the
-    // bounds aggregate, the staged window, and — through it — every
-    // downstream action; caching HERE computes the expensive prefix
-    // exactly once. The block windows themselves recompute per action
-    // (an even, parallel exchange+sort), which measures cheaper than
-    // materializing the windowed frame. Unpersisted after the final
+    // bounds aggregate and the staged window; caching HERE computes the
+    // expensive prefix exactly once. Unpersisted after the final
     // aggregate below.
     val blocked = cpg.withColumn("vec", vec)
-      .withColumn("_blk", expr(s"start div $blockSize"))
+      .withColumn("_blk", expr(s"start div ${blockSize}L"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val bounds = blocked.groupBy(col("chromosome"), col("_blk"))
+    val boundsAgg = blocked.groupBy(blockKey.map(col): _*)
       .agg(max(keyStruct).as("_max_ord"),
         min_by(col("vec"), keyStruct).as("_first_vec"))
-      .withColumn("_next_first_vec",
-        lead(col("_first_vec"), 1).over(wChromBlocks))
+    val bounds = perBlock(boundsAgg)
+    // dense index per chromosome string, 1-based in sorted order
+    val chromIdx = bounds.map(_.getString(0)).distinct.zipWithIndex
+      .map { case (c, i) => c -> (i + 1).toLong }.toMap
+    val stitchLead = local(
+      bounds.indices.map { i =>
+        val r = bounds(i)
+        val next = bounds.lift(i + 1).filter(_.getString(0) == r.getString(0))
+        Row(r.getString(0), r.getLong(1), r.get(2),
+          next.map(_.get(3)).orNull)
+      },
+      StructField("_max_ord", boundsAgg.schema("_max_ord").dataType),
+      StructField("_next_first_vec", boundsAgg.schema("_first_vec").dataType))
 
     val staged = blocked
-      .join(broadcast(bounds.select(col("chromosome"), col("_blk"),
-        col("_max_ord"), col("_next_first_vec"))),
-        Seq("chromosome", "_blk"))
+      .join(stitchLead, blockKey)
       .withColumn("_is_last", keyStruct === col("_max_ord"))
       .withColumn("_lead_vec", lead(col("vec"), 1).over(wb))
       .withColumn("_next_vec", when(col("_is_last"),
@@ -516,10 +533,10 @@ object Dm {
         graft.functions.Expressions.vecSqDist(col("vec"), col("_next_vec"))))
       .drop("vec", "bmap", "any_beta", "_lead_vec", "_next_vec",
         "_next_first_vec", "_max_ord")
-      // second cache point: the block-windowed frame has four readers
-      // (cutoff percentile, boundary change-points, offset totals, the
-      // final pass); cached, the 9.4M-row exchange+sort runs once
-      // instead of once per reader
+      // second cache point: the block-windowed frame has three readers
+      // (cutoff percentile, per-block change points, the final pass);
+      // cached, the 9.4M-row exchange+sort runs once instead of once
+      // per reader
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val cutoff = distCutoff.getOrElse {
@@ -532,49 +549,39 @@ object Dm {
     // point closes its segment; the NEXT row starts a new one)
     val flagged = staged.withColumn("change_point",
       col("last_in_chrom") || col("dist") > cutoff)
-    // boundary lag: previous block's last change_point (tiny frame,
-    // chromosome-windowed at block granularity)
-    val prevCp = flagged.filter(col("_is_last"))
-      .select(col("chromosome"), col("_blk"),
-        col("change_point").as("_last_cp"))
-      .withColumn("_prev_cp", lag(col("_last_cp"), 1).over(wChromBlocks))
-      .select(col("chromosome"), col("_blk"), col("_prev_cp"))
-    // dense unique index per chromosome string (tiny dimension) so the
-    // per-chromosome running ids cannot collide across partitions. The
-    // dimension is bounded (chromosome count), so it is collected and
-    // inlined as a literal map — a window over it would plan as a
-    // single-partition WindowExec (a foldable partitionBy key is
-    // stripped by the optimizer), which is harmless at ~25 rows but
-    // reads as the unpartitioned-window scale smell in every log.
-    val chromIdxMap = {
-      val chroms = blocked.select("chromosome").distinct()
-        .collect().map(_.getString(0)).sorted
-      if (chroms.isEmpty) map()
-      else map(chroms.zipWithIndex.flatMap { case (c, i) =>
-        Seq(lit(c), lit((i + 1).toLong)) }: _*)
-    }
+    // per block: the previous block's last change_point (a chromosome's
+    // first block gets the reference's `true`: a chromosome start always
+    // opens a segment) and the segment-id base, chromosome index × 10⁹
+    // plus the count of segment starts in the chromosome's earlier
+    // blocks — a block starts `prev_cp + inner change points` segments
+    val stitchLag = local({
+      var chrom: String = null
+      var prevCp = true
+      var off = 0L
+      perBlock(flagged.groupBy(blockKey.map(col): _*)
+        .agg(max(when(col("_is_last"), col("change_point"))),
+          count(when(col("change_point") && !col("_is_last"), 1))))
+        .map { r =>
+          val c = r.getString(0)
+          if (c != chrom) { chrom = c; prevCp = true; off = 0L }
+          val row = Row(c, r.getLong(1), prevCp,
+            chromIdx(c) * 1000000000L + off)
+          off += (if (prevCp) 1L else 0L) + r.getLong(3)
+          prevCp = r.getBoolean(2)
+          row
+        }.toSeq
+      },
+      StructField("_prev_cp", BooleanType),
+      StructField("_base", LongType))
     val wbRun = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // prev_change: the in-block lag; at a block's first row, the
-    // previous block's stitched change_point; at a chromosome's first
-    // block, the reference's `true` default (a chromosome start always
-    // opens a segment)
-    val withLp = flagged
-      .join(broadcast(prevCp), Seq("chromosome", "_blk"), "left")
+    // previous block's stitched change_point
+    val seg = flagged
+      .join(stitchLag, blockKey)
       .withColumn("prev_change", coalesce(
-        lag(col("change_point"), 1).over(wb), col("_prev_cp"), lit(true)))
-      .withColumn("_lp",
+        lag(col("change_point"), 1).over(wb), col("_prev_cp")))
+      .withColumn("segment_id", col("_base") +
         sum(when(col("prev_change"), 1L).otherwise(0L)).over(wbRun))
-    // per-block totals → cumulative offsets per chromosome (tiny frame)
-    val offsets = withLp.groupBy(col("chromosome"), col("_blk"))
-      .agg(max(col("_lp")).as("_tot"))
-      .withColumn("_off", coalesce(sum(col("_tot")).over(wChromBlocks
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("chromosome"), col("_blk"), col("_off"))
-    val seg = withLp
-      .join(broadcast(offsets), Seq("chromosome", "_blk"))
-      .withColumn("segment_id",
-        element_at(chromIdxMap, col("chromosome")) * 1000000000L
-          + col("_off") + col("_lp"))
 
     // per-segment aggregation incl Stouffer + BH (A13/A14)
     val aggs =
@@ -583,7 +590,8 @@ object Dm {
         count(lit(1)).as("n_probes")) ++
         contrasts.map(c => stoufferAgg(s"${c}_p_value").as(s"${c}_p_value")) ++
         contrasts.map(c => avg(col(s"${c}_estimate")).as(s"${c}_estimate"))
-    // same lineage-truncation rationale as runOls's fold
+    // checkpointed for the reason statsTable's stats are: BH's range
+    // sampler would otherwise re-run the segment aggregate
     val dmr = seg.groupBy("segment_id").agg(aggs.head, aggs.tail: _*)
       .localCheckpoint()
     blocked.unpersist(); staged.unpersist()

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** One completed stage attempt of a traced job. `callsite` is the first
   * line of the stage name (`count at Foo.scala:12`), which maps the
@@ -16,10 +17,13 @@ final case class StageRow(id: Int, wallMs: Long, taskMs: Long, gcMs: Long,
 /** What the jobs run under one tag did. `jobMs` is the union of their
   * [start, end] intervals (concurrent jobs count once); the task metrics
   * sum every task of the tag's stages; `storageHwmBytes` is the largest
-  * storage memory in use seen at one of those tasks' ends. */
+  * storage memory in use seen at one of those tasks' ends.
+  * `jobsByExecution` counts the jobs per `spark.sql.execution.id`, the
+  * jobs of RDD-API actions (no SQL execution) under [[Trace.RddJobs]]. */
 final case class TagStats(jobIds: Set[Int], jobMs: Long, cpuNs: Long,
     gcMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-    spillBytes: Long, storageHwmBytes: Long, stages: Vector[StageRow]) {
+    spillBytes: Long, storageHwmBytes: Long, stages: Vector[StageRow],
+    jobsByExecution: Map[Long, Int]) {
   def jobs: Int = jobIds.size
 }
 
@@ -35,8 +39,10 @@ final class Trace private (sc: SparkContext) extends SparkListener {
     val spans = mutable.ArrayBuffer.empty[(Long, Long)]
     var cpuNs, gcMs, shuffleRead, shuffleWrite, spill, storageHwm = 0L
     val stages = mutable.ArrayBuffer.empty[StageRow]
+    val byExecution = mutable.Map.empty[Long, Int].withDefaultValue(0)
     def stats = TagStats(jobIds.toSet, Trace.unionMs(spans.toSeq), cpuNs,
-      gcMs, shuffleRead, shuffleWrite, spill, storageHwm, stages.toVector)
+      gcMs, shuffleRead, shuffleWrite, spill, storageHwm, stages.toVector,
+      byExecution.toMap)
   }
 
   // guarded by `this`: the listener bus delivers on one thread, callers
@@ -81,12 +87,17 @@ final class Trace private (sc: SparkContext) extends SparkListener {
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     lastJobSeen = math.max(lastJobSeen, e.jobId)
     notifyAll()
-    val accs = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.tags")))
+    def prop(k: String) = Option(e.properties).flatMap(p =>
+      Option(p.getProperty(k)))
+    val accs = prop("spark.job.tags")
       .fold(Seq.empty[Acc])(_.split(",").toSeq.flatMap(tags.get))
     if (accs.nonEmpty) {
       openJobs(e.jobId) = (accs, e.time)
-      accs.foreach { a => a.jobIds += e.jobId; a.open += 1 }
+      val exec = prop(SQLExecution.EXECUTION_ID_KEY)
+        .fold(Trace.RddJobs)(_.toLong)
+      accs.foreach { a =>
+        a.jobIds += e.jobId; a.open += 1; a.byExecution(exec) += 1
+      }
       // a stage shared with an earlier job stays with that job's tags
       e.stageIds.foreach(s => if (!stageTags.contains(s)) stageTags(s) = accs)
     }
@@ -138,6 +149,10 @@ final class Trace private (sc: SparkContext) extends SparkListener {
 }
 
 object Trace {
+  /** The [[TagStats.jobsByExecution]] key of jobs outside any SQL
+    * execution (RDD-API actions such as `Ranks`' eager scans). */
+  val RddJobs: Long = -1L
+
   /** A trace of `spark`'s jobs from now on. */
   def attach(spark: SparkSession): Trace = {
     val t = new Trace(spark.sparkContext)

@@ -1,42 +1,35 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
 
-/** Global-order operators (row_number / ntile / Benjamini-Hochberg over a
-  * TOTAL order) without a single-partition window.
+/** Global-order operators (row_number / ntile / prefix sum /
+  * Benjamini-Hochberg over a TOTAL order) without a single-partition
+  * window.
   *
   * `Window.orderBy(...)` with no partition spec moves every row to one
   * task — the textbook scale cliff (WindowExec even warns). The scale
-  * path used here is the zipWithIndex shape, kept declarative:
+  * path used here is the `RDD.zipWithIndex` shape ([[Ranks.scan]]):
   *
   *   1. `repartitionByRange(n, sortCols)` — ONE wide shuffle; rows end up
-  *      range-ordered across partitions (AQE does not coalesce an
-  *      explicit-N repartition, so partition ids are stable within the
-  *      query);
-  *   2. per-partition counts from a side branch over the SAME exchange
-  *      (ReuseExchange collapses the two subtrees to one shuffle; the
-  *      branch aggregates map-side to one row per partition);
-  *   3. cumulative counts over the tiny (numParts-row) frame give each
-  *      partition its global offset, broadcast-joined back;
-  *   4. the within-partition index comes from `monotonically_increasing_id`
-  *      evaluated AFTER `sortWithinPartitions` (its documented layout is
-  *      partitionId·2^33 + recordIndex; the projection holding it cannot be
-  *      reordered below the sort because the expression is nondeterministic).
+  *      range-ordered across partitions, then sorted within them;
+  *   2. eager numParts-row jobs over the same `toRdd` instance give each
+  *      partition its starting state (a count offset, a running minimum);
+  *   3. one narrow map attaches each row's value from its partition's
+  *      starting state and the rows before it in the partition.
   *
-  * Global rank therefore costs one data shuffle + one numParts-row
-  * broadcast, at any cluster width. Determinism: callers pass sort
-  * columns that form a total order (unique tiebreaker) when the rank
-  * value itself must be reproducible; BH is invariant to tie order either
-  * way (tied p-values share one adjusted value).
+  * So every operator here costs one data shuffle plus one or two
+  * numParts-row collects, at any cluster width. Determinism: callers
+  * pass sort columns that form a total order (unique tiebreaker) when
+  * the rank value itself must be reproducible; BH is invariant to tie
+  * order either way (tied p-values share one adjusted value).
   */
 object Ranks {
-
-  private val MidMask = (1L << 33) - 1
 
   /** Attach 1-based global `row_number() over (order by sortCols)` as
     * `outCol` (and the total row count as `totalCol` if asked — it falls
@@ -63,8 +56,10 @@ object Ranks {
     * jobs reuse the single shuffle written by the repartition. */
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column], outCol: String,
       totalCol: Option[String] = None, numParts: Int = 0): DataFrame = {
-    val (ranked, total) = scan(df, sortCols, outCol, numParts,
-      exclusive = false)(_ => 1L)
+    val (ranked, total) = scan(df, sortCols, numParts,
+      StructField(outCol, LongType, nullable = false), _ => 1L) {
+      (_, before, _, _) => before + 1
+    }
     totalCol.fold(ranked)(t => ranked.withColumn(t, lit(total)))
   }
 
@@ -86,49 +81,39 @@ object Ranks {
   }
 
   /** Benjamini-Hochberg FDR adjustment (reference dm.py:475-477), scale
-    * path: p_adj(i) = min(1, min over rank j >= i of n·p_j/j) — a global
-    * suffix-min over the p-ascending order.
+    * path: p_adj(i) = min(1, min over rank j >= i of n·p_j/j), where the
+    * rank is p-ascending over the n non-null, non-NaN p-values.
     *
-    * After ranking (one wide shuffle), rows land in `numShufflePartitions`
-    * rank buckets derived from the rank itself; the suffix min is the
-    * within-bucket window suffix (second, bucket-hash shuffle) combined
-    * with a broadcast suffix-min over the numParts-row bucket minima —
-    * the classic distributed scan decomposition. Null/NaN p-values pass
-    * through with a null adjusted value, as in the reference.
+    * One forward [[scan]] over one range shuffle by `p` DESCENDING: the
+    * suffix-min of the ascending order is a running minimum in that
+    * order, and a row's ascending rank is n minus the count of non-null,
+    * non-NaN rows before it. Two eager jobs read the shuffle: the
+    * per-partition counts, then each partition's minimum of p·n/rank;
+    * the attach map carries the running minimum from the prefix minimum
+    * of the earlier partitions and caps it at 1. Null and NaN p-values
+    * ride the same scan with a null adjusted value, as in the reference.
+    * The input is referenced once, so folding calls keeps a linear plan.
+    * `pCol` must be DoubleType: p·n/rank is evaluated in double, then
+    * exact minima, as the SQL oracle does.
     *
     * Tie order cannot change the result (tied p share one adjusted
     * value), so no tiebreaker is required for correctness; pass one via
-    * `tieCols` when the intermediate rank itself must be reproducible. */
+    * `tieCols` when the range layout itself must be reproducible. */
   def bhAdjust(df: DataFrame, pCol: String, outCol: String,
       tieCols: Seq[Column] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    val nBuckets = spark.sessionState.conf.numShufflePartitions
-    val good = col(pCol).isNotNull && !isnan(col(pCol))
-    val ranked = withGlobalRank(df.filter(good),
-      col(pCol) +: tieCols, "_bh_rank", totalCol = Some("_bh_n"))
-      .withColumn("_bh_v", col(pCol) * col("_bh_n") / col("_bh_rank"))
-      .withColumn("_bh_b",
-        expr(s"((_bh_rank - 1) * $nBuckets) div _bh_n"))
-    val wSuffix = Window.partitionBy(col("_bh_b"))
-      .orderBy(col("_bh_rank").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bucketMins = ranked.groupBy(col("_bh_b"))
-      .agg(min(col("_bh_v")).as("_bh_bmin"))
-    val wAfter = Window.partitionBy(pmod(col("_bh_b"), lit(1)))
-      .orderBy(col("_bh_b"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    val minAfter = bucketMins
-      .withColumn("_bh_after", min(col("_bh_bmin")).over(wAfter))
-      .select(col("_bh_b"), col("_bh_after"))
-    val adjusted = ranked
-      .withColumn("_bh_ls", min(col("_bh_v")).over(wSuffix))
-      .join(broadcast(minAfter), Seq("_bh_b"))
-      .withColumn(outCol,
-        least(least(col("_bh_ls"), coalesce(col("_bh_after"),
-          col("_bh_ls"))), lit(1.0)))
-      .drop("_bh_rank", "_bh_n", "_bh_v", "_bh_b", "_bh_ls", "_bh_after")
-    adjusted.unionByName(
-      df.filter(!good).withColumn(outCol, lit(null).cast("double")))
+    val pIdx = df.schema.fieldIndex(pCol)
+    require(df.schema(pIdx).dataType == DoubleType,
+      s"bhAdjust needs $pCol as DoubleType")
+    val good: InternalRow => Boolean = row =>
+      !row.isNullAt(pIdx) && !row.getDouble(pIdx).isNaN
+    scan(df, col(pCol).desc +: tieCols, 0,
+      StructField(outCol, DoubleType, nullable = true),
+      row => if (good(row)) 1L else 0L,
+      minOf = Some((row, before, n) =>
+        if (good(row)) row.getDouble(pIdx) * n / (n - before)
+        else Double.PositiveInfinity)) { (row, _, _, runMin) =>
+      if (good(row)) math.min(runMin, 1.0) else null
+    }._1
   }
 
   /** Global prefix sum of `valueCol` (LongType; NULL counts as 0) in
@@ -148,49 +133,73 @@ object Ranks {
     val vIdx = df.schema.fieldIndex(valueCol)
     require(df.schema(vIdx).dataType == LongType,
       s"withGlobalPrefixSum needs $valueCol as LongType")
-    scan(df, sortCols, outCol, numParts, exclusive)(row =>
-      if (row.isNullAt(vIdx)) 0L else row.getLong(vIdx))._1
+    val inc: InternalRow => Long = row =>
+      if (row.isNullAt(vIdx)) 0L else row.getLong(vIdx)
+    scan(df, sortCols, numParts,
+      StructField(outCol, LongType, nullable = false), inc) {
+      (row, before, _, _) => if (exclusive) before else before + inc(row)
+    }._1
   }
 
-  /** The zipWithIndex scan behind [[withGlobalRank]] and
-    * [[withGlobalPrefixSum]]: range-repartition on `sortCols` into
-    * `numParts` partitions (0: the shuffle partition count), sort within
-    * them, and attach the running sum of `inc(row)` as LongType `outCol`,
-    * through the current row or, if `exclusive`, before it. One `toRdd`
-    * instance feeds the per-partition total job (eager) and the attach
-    * map. Returns the frame and the grand total. */
-  private def scan(df: DataFrame, sortCols: Seq[Column], outCol: String,
-      numParts: Int, exclusive: Boolean)(
-      inc: InternalRow => Long): (DataFrame, Long) = {
+  /** The zipWithIndex scan behind every operator here: range-repartition
+    * on `sortCols` into `numParts` partitions (0: the shuffle partition
+    * count), sort within them, and attach the column `out`. One `toRdd`
+    * instance feeds every eager job and the attach map, so they all read
+    * one shuffle and one set of range boundaries:
+    *   - a job for each partition's total of `inc(row)`, whose prefix
+    *     sums give every row `before`, the running total strictly before
+    *     it, and the grand total `n`;
+    *   - if `minOf` is given, a job for each partition's minimum of
+    *     `minOf(row, before, n)`, whose prefix minima start a running
+    *     minimum through each row.
+    * `cell(row, before, n, runMin)` is the row's value of `out`
+    * (`runMin` is +∞ without `minOf`). Returns the frame and `n`. */
+  private def scan(df: DataFrame, sortCols: Seq[Column], numParts: Int,
+      out: StructField, inc: InternalRow => Long,
+      minOf: Option[(InternalRow, Long, Long) => Double] = None)(
+      cell: (InternalRow, Long, Long, Double) => Any): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val n = if (numParts > 0) numParts
+    val parts = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(n, sortCols: _*)
+    val sorted = df.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val rdd = sorted.queryExecution.toRdd
-    val partTotals = rdd.mapPartitionsWithIndex { (pid, it) =>
+    def perPartition[T: ClassTag](f: (Int, Iterator[InternalRow]) => T) =
+      rdd.mapPartitionsWithIndex((pid, it) => Iterator((pid, f(pid, it))))
+        .collect().sortBy(_._1).map(_._2)
+    val offsets = perPartition { (_, it) =>
       var s = 0L
       while (it.hasNext) s += inc(it.next())
-      Iterator((pid, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partTotals.scanLeft(0L)(_ + _)
-    val bOff = spark.sparkContext.broadcast(offsets)
+      s
+    }.scanLeft(0L)(_ + _)
+    val n = offsets.last
+    val mins = minOf.fold(offsets.map(_ => Double.PositiveInfinity)) { v =>
+      perPartition { (pid, it) =>
+        var before = offsets(pid)
+        var m = Double.PositiveInfinity
+        while (it.hasNext) {
+          val row = it.next()
+          m = math.min(m, v(row, before, n))
+          before += inc(row)
+        }
+        m
+      }.scanLeft(Double.PositiveInfinity)(math.min)
+    }
     val withOut = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = bOff.value(pid)
+      var before = offsets(pid)
+      var runMin = mins(pid)
       val outRow = new GenericInternalRow(1)
       val joined = new JoinedRow
       // The consumer (RDDScanExec) projects each row to its own buffer
       // before advancing, so reusing the holders is safe.
       it.map[InternalRow] { row =>
-        val before = acc
-        acc += inc(row)
-        outRow.update(0, if (exclusive) before else acc)
+        minOf.foreach(v => runMin = math.min(runMin, v(row, before, n)))
+        outRow.update(0, cell(row, before, n, runMin))
+        before += inc(row)
         joined(row, outRow)
       }
     }
-    val outSchema = sorted.schema
-      .add(StructField(outCol, LongType, nullable = false))
-    (GraftBridge.internalCreateDataFrame(spark, withOut, outSchema),
-      offsets.last)
+    (GraftBridge.internalCreateDataFrame(spark, withOut,
+      sorted.schema.add(out)), n)
   }
 }

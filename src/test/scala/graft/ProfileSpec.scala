@@ -19,8 +19,25 @@ class ProfileSpec extends SparkSpec {
     val out = profile("driver", q)
     val rows = out.linesIterator.filter(_.startsWith(q + " ")).toVector
     assert(rows.size == 1, out)
-    // columns: query wall constr action jobs ...
-    assert(rows.head.trim.split("\\s+")(4).toInt >= 1, out)
+    // columns: query wall constr action jobs ... maxExec
+    val cols = rows.head.trim.split("\\s+")
+    assert(cols(4).toInt >= 1, out)
+    assert(cols.last.matches("(e\\d+|rdd)=\\d+"), out)
+  }
+
+  test("driver mode's warm-up registers every view of the timed " +
+      "directory, so no timed construction pays a first read") {
+    val dir = sf("sf0.001")
+    val tables = new java.io.File(dir).list().toSeq
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+    // a new session has no views; the warm-up runs at another directory
+    val fresh = spark.newSession()
+    Console.withOut(new java.io.ByteArrayOutputStream) {
+      Profile.command(Seq("driver", q), dir, sf("sf0.01"))(fresh)
+    }
+    assert(tables.size > 3)
+    tables.foreach(t =>
+      assert(fresh.catalog.tableExists(Q.view(dir, t)), s"no view of $t"))
   }
 
   test("stages mode prints the timed pass's stages") {

@@ -135,19 +135,27 @@ class DmSpec extends SparkSpec {
     // stitch, the last-change-point lag stitch, and the running-offset
     // prefixes reproduce the single-window-per-chromosome semantics
     // exactly — including segments that straddle block boundaries.
+    // The betas are sparse (cg1_5 lacks b1, b1's cg2_7 is null), and
+    // chromosome "0" has ranges but no betas: it sorts first yet takes
+    // no chromosome index.
     val probes = for {
       c <- Seq("1", "2"); i <- 1 to 40
     } yield (s"cg${c}_$i", c, i * 1000L, i * 1000L + 2L)
-    val ranges = probes.toDF("probe_id", "chromosome", "start", "end")
+    val unmeasured = (1 to 5).map(i => (s"cg0_$i", "0", i * 1000L,
+      i * 1000L + 2L))
+    val ranges = (probes ++ unmeasured)
+      .toDF("probe_id", "chromosome", "start", "end")
     val betas = (for {
       (pid, c, st, _) <- probes
       s <- Seq("a1", "b1")
+      if !(pid == "cg1_5" && s == "b1")
     } yield {
       val jump = (st / 7000L) % 3 // plateaus of ~7 probes
-      (s, pid, 0.1f * jump + (if (s == "b1") 0.01f else 0f) +
-        (if (c == "2") 0.05f else 0f))
+      (s, pid, if (pid == "cg2_7" && s == "b1") None else Some(
+        0.1f * jump + (if (s == "b1") 0.01f else 0f) +
+          (if (c == "2") 0.05f else 0f)))
     }).toDF("sample_label", "probe_id", "beta")
-    val dmp = probes.map { case (pid, _, st, _) =>
+    val dmp = (probes ++ unmeasured).map { case (pid, _, st, _) =>
       (pid, 0.001 + (st % 13).toDouble / 100.0, 0.05) }
       .toDF("probe_id", "g_p_value", "g_estimate")
     def run(bs: Long) =
@@ -165,5 +173,10 @@ class DmSpec extends SparkSpec {
     val one = run(1000000000L)
     assert(many.size > 10, s"fixture should split into many segments")
     assert(many == one)
+    // segment_id = chromosome index × 10⁹ + running count, the index
+    // 1-based over the sorted chromosomes that have betas
+    assert(many.map(t => (t._2, t._1 / 1000000000L)).distinct.sorted ==
+      Seq(("1", 1L), ("2", 2L)))
+    assert(many.map(_._5).sum == probes.size)
   }
 }

@@ -80,4 +80,26 @@ class TraceSpec extends SparkSpec {
       assert(open.jobs == 1 && open.jobMs == 0)
     } finally trace.detach()
   }
+
+  test("jobs are counted per SQL execution, RDD-API jobs under one key") {
+    val trace = Trace.attach(spark)
+    try {
+      val dir = sf("sf0.001")
+      // views registered outside the tag: a first read may run a job
+      val lineitem = Q.t(spark, dir, "lineitem")
+      val nation = Q.t(spark, dir, "nation")
+      trace.run("trace-exec") {
+        lineitem.groupBy("l_returnflag").count().collect()
+        nation.collect()
+        spark.sparkContext.parallelize(1 to 10, 2).count()
+        spark.sparkContext.parallelize(1 to 10, 2).count()
+      }
+      val st = trace.drain("trace-exec")
+      assert(st.jobsByExecution.values.sum == st.jobs)
+      assert(st.jobsByExecution.get(Trace.RddJobs).contains(2),
+        st.jobsByExecution)
+      assert((st.jobsByExecution - Trace.RddJobs).size == 2,
+        st.jobsByExecution)
+    } finally trace.detach()
+  }
 }

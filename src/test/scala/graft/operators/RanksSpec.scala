@@ -98,4 +98,56 @@ class RanksSpec extends SparkSpec {
     val a = Ranks.bhAdjust(one, "p", "a").select("a").as[Double].head()
     assert(a === 0.25)
   }
+
+  /** BH by brute force on the driver: sort the non-null, non-NaN p
+    * ascending, p·n/rank in double, suffix minimum, cap at 1. */
+  private def bruteBh(ps: Seq[Option[Double]]): Seq[Option[Double]] = {
+    val good = ps.zipWithIndex
+      .collect { case (Some(p), i) if !p.isNaN => (p, i) }.sortBy(_._1)
+    val n = good.size.toLong
+    val out = Array.fill[Option[Double]](ps.size)(None)
+    var m = Double.PositiveInfinity
+    good.zipWithIndex.reverseIterator.foreach { case ((p, i), r) =>
+      m = math.min(m, p * n / (r + 1).toLong)
+      out(i) = Some(math.min(m, 1.0))
+    }
+    out.toSeq
+  }
+
+  test("bhAdjust equals a driver-side brute force exactly: ties, null, " +
+      "NaN, p*n/rank above 1, empty partitions, two chained calls") {
+    // 45 rows over 64 range partitions: most partitions are empty
+    def pOf(k: Int, salt: Int): Option[Double] =
+      if ((k + salt) % 11 == 0) None
+      else if ((k + salt) % 13 == 5) Some(Double.NaN)
+      else if (k % 9 == salt) Some(1.25) // capped at 1
+      else if (k % 4 == 0) Some(0.9 + (k % 3) * 0.03) // p*n/rank > 1
+      else Some(((k * 7 + salt) % 6 + 1) / 97.0) // six tied values
+    val rows = (0 until 45).map(k => (k.toLong, pOf(k, 0), pOf(k, 3)))
+    val df = rows.toDF("k", "p", "q")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    val got = try {
+      val twice = Ranks.bhAdjust(Ranks.bhAdjust(df, "p", "p_adj"),
+        "q", "q_adj")
+      val plan = twice.queryExecution.executedPlan.toString
+      Seq("Window", "BroadcastHashJoin", "Union").foreach { op =>
+        assert(!plan.contains(op), s"$op in\n$plan")
+      }
+      twice.collect()
+    } finally spark.conf.set(key, prev)
+    assert(got.length == rows.size)
+    val byKey = got.map(r => r.getAs[Long]("k") -> r).toMap
+    def bits(v: Option[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+    for ((want, c) <- Seq((bruteBh(rows.map(_._2)), "p_adj"),
+        (bruteBh(rows.map(_._3)), "q_adj")); k <- rows.indices) {
+      val g = Option(byKey(k.toLong).getAs[java.lang.Double](c))
+        .map(_.doubleValue)
+      assert(bits(g) == bits(want(k)), s"$c at k=$k: got $g, want ${want(k)}")
+    }
+    // the fixture reaches every case it names
+    assert(rows.exists(_._2.isEmpty) && rows.exists(_._2.exists(_.isNaN)))
+    assert(bruteBh(rows.map(_._2)).flatten.contains(1.0))
+  }
 }
