@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *     (events.ts — moves session boundaries, as-of matches, embargo
   *     windows, watermark lateness);
   *   - documents.text goes through a seed-keyed affine substitution
-  *     cipher (same family as ScaleBench's replica transform —
+  *     cipher (same family as `ScaleBench.generate`'s replica transform —
   *     length-preserving, shingle-set-scrambling) and ~1/13 docs gain
   *     a rare appended token (shingle-count tails move, so prefix /
   *     length-filter boundaries land on different pairs); `n_chars` is

@@ -212,7 +212,7 @@ object Cnv {
     * target at the end are dropped (cnv.py:325). The ramp is
     * load-bearing: jumping straight to `minOverlap` on uniformly
     * under-filled tiles marks every bin and collapses the chromosome to
-    * a single bin (caught at EPICv2 scale by DomainBench). */
+    * a single bin (caught at EPICv2 scale by `ScaleBench domain`). */
   private[cnv] def mergeRamp(bins0: Array[(Long, Long)],
       pStarts: Array[Long], pEnds: Array[Long], minOverlap: Int,
       precision: Int, slack: Long): Array[(Long, Long)] = {

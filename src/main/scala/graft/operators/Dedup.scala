@@ -156,7 +156,7 @@ object Dedup {
     * shuffles one row per co-occurring PAIR per shingle — quadratic in
     * hot-shingle document frequency.
     *
-    * Measured at the ScaleBench rungs (q124 surface; refreshed r14 at
+    * Measured at the `ScaleBench scale` rungs (q124 surface; refreshed r14 at
     * HEAD after the FP-exactness fixes): candidate pairs are exactly
     * linear in corpus volume (598k / 5.99M / 59.9M at x1/x10/x100)
     * with the max prefix bucket flat at 12. The shuffle BYTES show one

@@ -552,8 +552,8 @@ object DomainQ {
     (s, d) => {
       import s.implicits._
       // sample universe = suppkey mod 32: the reference's study shape is
-      // dozens of samples x many probes (the million-probe axis is
-      // DomainBench's job); a 1000-wide beta vector would only measure
+      // dozens of samples x many probes (the million-probe axis is the
+      // job of `ScaleBench domain`); a 1000-wide beta vector would only measure
       // array-shuffle volume, not the operator
       val betas = t(s, d, "lineitem")
         .groupBy($"l_partkey", ($"l_suppkey" % 32).as("sk"))

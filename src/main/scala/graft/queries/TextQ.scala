@@ -1092,7 +1092,7 @@ object TextQ {
       val base = t(s, d, "documents").filter($"text".isNotNull)
         .select($"doc_id", $"text")
       // mutant ids live in a disjoint high-bit namespace (1 << 41):
-      // ScaleBench replicas already reach doc_id ≈ 3.1e10 at x100, and
+      // `ScaleBench.generate` replicas reach doc_id ≈ 3.1e10 at x100, and
       // a fixed decimal offset silently corrupts the planted-pair truth
       // the moment real ids cross it
       val mutants = base.filter($"doc_id" % 5 === 0)

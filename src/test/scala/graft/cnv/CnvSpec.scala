@@ -137,8 +137,8 @@ class CnvSpec extends SparkSpec {
     // wherever two consecutive bins are already full. (A perfectly
     // uniform under-filled chromosome collapses to one bin under the
     // reference's own marking rules — that is faithful, not a bug;
-    // the pre-DomainBench implementation collapsed even clustered
-    // data because it skipped the ramp.)
+    // the implementation before `ScaleBench domain` collapsed even
+    // clustered data because it skipped the ramp.)
     val tiles = (0 until 40)
       .map(i => ("1", i * 50000L, (i + 1) * 50000L))
       .toDF("chrom", "start", "end")

@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   * state (MemoryStream-driven micro-batches) and the stream-static
   * SimHash near-dup gate against a corpus band index. */
 class DocumentStreamsSpec extends SparkSpec {
+  import DocumentStreamsSpec.Doc
   import spark.implicits._
 
-  private case class Doc(doc_id: Long, ingest_ts: java.sql.Timestamp,
-      text: String)
   private def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
 
   test("dedupStream keeps the first arrival per exact fingerprint") {
@@ -365,4 +364,12 @@ class DocumentStreamsSpec extends SparkSpec {
       assert(out(2L) == ((0, 0, "nothing sensitive")))
     } finally q.stop()
   }
+}
+
+object DocumentStreamsSpec {
+  /** The streamed row. Declared here, not as a private member class of
+    * the spec: there, the encoder's generated code found no usable
+    * `doc_id()` accessor and Spark fell back to interpreted evaluation. */
+  final case class Doc(doc_id: Long, ingest_ts: java.sql.Timestamp,
+      text: String)
 }
