@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.obs.Trace
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
@@ -30,6 +32,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *     pass's SQL node metrics, so stage CPU maps to a plan node.
   *   - `plan <q…> [--out dir --tag t]` — the formatted physical plan, to
   *     stdout or to `dir/<q>_<t>.txt` (the plan evidence under plans/).
+  *   - `audit [q,…]` — the [[WindowAudit.auditPlan]] scale-killer window
+  *     hits of each query's executed plan (all queries when no list is
+  *     given), a `[windowaudit] >>> q` marker before each query so
+  *     WindowExec warnings from eager jobs inside construction correlate
+  *     to it, and the count flagged.
   *
   * Queries read SPARK_GRAFT_SF_DIR (default sf0.1); the untimed warmup
   * (codegen/JIT once per query shape, like Bench) reads
@@ -39,10 +46,12 @@ import org.apache.spark.sql.execution.ExplainMode
   *   sbt "runMain graft.Profile driver q122_pq_adc_topk,q71_dmr_endtoend"
   *   sbt "runMain graft.Profile stages q59_poobah_slice /root/testdata/sf0.1"
   *   sbt "runMain graft.Profile plan q59_poobah_slice --out plans/r15 --tag after"
+  *   sbt "runMain graft.Profile audit q122_pq_adc_topk"
   */
 object Profile {
   private val Usage =
-    "usage: Profile driver [q,...] | stages <q> [sf] | plan <q...> [--out dir --tag t]"
+    "usage: Profile driver [q,...] | stages <q> [sf] | " +
+      "plan <q...> [--out dir --tag t] | audit [q,...]"
 
   def main(args: Array[String]): Unit = {
     val cmd = command(args.toSeq,
@@ -62,9 +71,8 @@ object Profile {
     * command line before any session exists. */
   def command(args: Seq[String], sfDir: String, warmDir: String)
       : SparkSession => Unit = args match {
-    case Seq("driver", names @ _*) if names.size <= 1 =>
-      driver(_, names.headOption.map(_.split(",").map(_.trim).toSet),
-        sfDir, warmDir)
+    case Seq("driver", list @ _*) if list.size <= 1 =>
+      driver(_, registered(list), sfDir, warmDir)
     case Seq("stages", name, dir @ _*) if dir.size <= 1 =>
       stages(_, name, dir.headOption.getOrElse(sfDir), warmDir)
     case Seq("plan", rest @ _*) =>
@@ -73,8 +81,16 @@ object Profile {
       val opts = flags.grouped(2).map(p => p(0) -> p(1)).toMap
       require(opts.keySet.subsetOf(Set("--out", "--tag")), Usage)
       plan(_, names, sfDir, opts.get("--out"), opts.get("--tag"))
+    case Seq("audit", list @ _*) if list.size <= 1 =>
+      audit(_, registered(list), sfDir)
     case _ => throw new IllegalArgumentException(Usage)
   }
+
+  /** The registered queries an optional comma list names, sorted; all of
+    * them when there is no list. */
+  private def registered(list: Seq[String]): Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => list.forall(_.split(",").map(_.trim).contains(n)))
 
   /** Runs `names` once, untimed, at `warmDir` (codegen/JIT once per
     * query shape), registers the `Q.t` view of every table in `sfDir`,
@@ -83,7 +99,7 @@ object Profile {
       warmDir: String, sfDir: String)(f: Trace => Unit): Unit = {
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     Option(new java.io.File(sfDir).list()).toSeq.flatten
       .filter(_.endsWith(".parquet"))
@@ -93,11 +109,9 @@ object Profile {
     try f(trace) finally trace.detach()
   }
 
-  private def driver(spark: SparkSession, filter: Option[Set[String]],
+  private def driver(spark: SparkSession, names: Seq[String],
       sfDir: String, warmDir: String): Unit = {
     import org.apache.spark.sql.catalyst.QueryPlanningTracker._
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => filter.forall(_.contains(n)))
     traced(spark, names, warmDir, sfDir) { trace =>
       println("query                                   wall  constr  action   jobs  jobSec    gap   parse   analy   optim    plan  maxExec")
       var tWall = 0.0; var tJob = 0.0; var tGap = 0.0; var tConstr = 0.0
@@ -125,7 +139,7 @@ object Profile {
           tWall += wall; tJob += jobSec; tGap += gap; tConstr += constr
           spark.catalog.clearCache(); System.gc()
           Some((name, wall, gap))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           println(s"$name FAILED: ${e.getMessage}"); None
         }
       }
@@ -193,5 +207,20 @@ object Profile {
           println(s"[profile] wrote $path")
       }
     }
+  }
+
+  private def audit(spark: SparkSession, names: Seq[String],
+      sfDir: String): Unit = {
+    val bad = names.count { name =>
+      println(s"[windowaudit] >>> $name"); Console.flush()
+      val hits = try WindowAudit.auditPlan(
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+        catch { case NonFatal(e) => println(s"[windowaudit] ERR $name " +
+          s"${e.getClass.getSimpleName}: ${e.getMessage}"); Nil }
+      if (hits.nonEmpty)
+        println(s"[windowaudit] $name :: ${hits.mkString(" | ")}")
+      hits.nonEmpty
+    }
+    println(s"[windowaudit] done ($bad flagged)")
   }
 }

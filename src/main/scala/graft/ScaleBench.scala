@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.json.JsonMapper
@@ -49,11 +51,12 @@ import org.apache.spark.sql.functions._
   *     seconds.
   *
   * Every mode runs through [[run]]: one warm-up, the shapes in ABBA
-  * order, each stage under a [[Trace]] tag, the fastest round per stage.
-  * The JSON line names every stage with its wall seconds, jobs, shuffle
-  * write MB, GC seconds and the counts it checks. No mode reads files
-  * except `scale`, and no data is random: reruns rebuild bit-identical
-  * inputs.
+  * order, each stage under a [[Trace]] tag, the fastest successful round
+  * per stage; [[graft.Bench]] times the registry through it too. The JSON
+  * line names every stage with its wall seconds, jobs, shuffle write MB,
+  * GC seconds and the counts it checks, or the `error` of a stage that
+  * never succeeded. No mode reads files except `scale`, and no data is
+  * random: reruns rebuild bit-identical inputs.
   *
   *   sbt "runMain graft.ScaleBench [scale|domain|domain-skew|dedup-skew]"
   */
@@ -78,17 +81,24 @@ object ScaleBench {
       warmShape: Option[String] = None, isolate: Boolean = false,
       artifacts: Seq[String] = Nil)
 
-  /** One stage run as the trace saw it. */
+  /** One stage run as the trace saw it. `gcMs` is the JVM's GC time
+    * during the stage (local mode: the driver JVM is the cluster), not the
+    * tasks' summed `jvmGCTime`, which counts one pause once per task it
+    * overlapped. `error` is the first 200 characters of a non-fatal
+    * failure's message; a failed run keeps its wall and telemetry but no
+    * counts. */
   final case class Timing(wall: Double, jobs: Int, shuffleBytes: Long,
-      gcMs: Long, counts: Seq[(String, Long)])
+      gcMs: Long, spillBytes: Long, storageHwmBytes: Long,
+      counts: Seq[(String, Long)], error: Option[String] = None)
 
   /** Every round in the order it ran: (shape, its stages' timings). */
   final case class Run(rounds: Seq[(String, Seq[(String, Timing)])],
       warmErrors: Map[String, String]) {
-    /** Per stage, the round with the least wall time. */
+    /** Per stage, the successful round with the least wall time; a stage
+      * that never succeeded keeps its fastest failure. */
     def best(shape: String): Seq[(String, Timing)] =
-      rounds.filter(_._1 == shape).map(_._2).transpose
-        .map(rs => rs.head._1 -> rs.map(_._2).minBy(_.wall))
+      rounds.filter(_._1 == shape).map(_._2).transpose.map(rs => rs.head._1 ->
+        rs.map(_._2).minBy(t => (t.error.isDefined, t.wall)))
     def timing(shape: String, stage: String): Timing =
       best(shape).toMap.apply(stage)
     /** Second shape's best wall over the first's. */
@@ -119,35 +129,52 @@ object ScaleBench {
       .agg(sum("r")).collect()
   }
 
-  /** The warm-up, then every round; each stage is followed, outside its
-    * timed window, by a GC that reaps unreferenced localCheckpoint blocks,
-    * and each shape run by clearing the cache. */
+  private def gcMillis(): Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
+
+  /** The warm-up, then every round. Each timed stage is followed, outside
+    * its timed window, by a GC that reaps unreferenced localCheckpoint
+    * blocks, and its trace is drained after that, so the cleanup the GC
+    * sets off settles before the next stage starts. `isolate` clears the
+    * cache after every stage, warm or timed; every shape run ends by
+    * clearing it. The warm shape runs no explicit GC: the JVM sizes its
+    * heap to the workload there, and a full GC after each warm stage kept
+    * Bench's heap small enough that young GCs landed in the timed
+    * windows. A stage that throws a non-fatal error (`Try` lets fatal
+    * ones through) is recorded with it and the round goes on. */
   def run(spark: SparkSession, mode: Mode): Run = {
+    def isolate(): Unit = if (mode.isolate) spark.catalog.clearCache()
     def pass[T](shape: String)(f: Stage => T): Seq[(String, T)] =
-      try mode.stages(spark, shape).map { s =>
-        try s.name -> f(s) finally {
-          if (mode.isolate) spark.catalog.clearCache()
-          System.gc()
-        }
-      } finally spark.catalog.clearCache()
+      try mode.stages(spark, shape).map(s => s.name -> f(s))
+      finally spark.catalog.clearCache()
     warmup(spark)
     val warmErrors = mode.warmShape.toSeq.flatMap(pass(_) { s =>
-      try { s.body(); None } catch { case NonFatal(e) => Some(e.toString) }
+      try Try(s.body()).failed.toOption.map(_.toString) finally isolate()
     }).collect { case (name, Some(e)) => name -> e }.toMap
     val trace = Trace.attach(spark)
     try Run(order(mode.shapes, mode.rounds).zipWithIndex.map {
       case (shape, i) => shape -> pass(shape) { s =>
         val tag = s"scalebench-${mode.metric}-$shape-${s.name}-$i"
-        val t0 = System.nanoTime()
-        val counts = trace.run(tag)(s.body())
+        val (gc0, t0) = (gcMillis(), System.nanoTime())
+        val counts = Try(trace.run(tag)(s.body()))
         val wall = (System.nanoTime() - t0) / 1e9
+        val gcMs = gcMillis() - gc0
+        isolate()
+        System.gc()
         val st = trace.drain(tag)
-        Timing(wall, st.jobs, st.shuffleWriteBytes, st.gcMs, counts)
+        val error = counts.failed.toOption.map(e =>
+          Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+        Timing(wall, st.jobs, st.shuffleWriteBytes, gcMs, st.spillBytes,
+          st.storageHwmBytes, counts.getOrElse(Nil), error)
       }
     }, warmErrors) finally trace.detach()
   }
 
-  private val Json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+  /** The one JSON mapper of the harness mains: Scala collections, and
+    * `ListMap`s keep their key order. */
+  private[graft] val Json =
+    JsonMapper.builder().addModule(DefaultScalaModule).build()
   private def rounded(x: Double, digits: Int): Double =
     BigDecimal(x).setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble
 
@@ -158,6 +185,7 @@ object ScaleBench {
       "wall" -> rounded(t.wall, 3), "jobs" -> t.jobs,
       "shuffle_mb" -> rounded(t.shuffleBytes / 1048576.0, 3),
       "gc_s" -> rounded(t.gcMs / 1e3, 3)) ++ t.counts ++
+      t.error.map("error" -> _) ++
       run.warmErrors.get(name).map("warmup_error" -> _): _*)
     Json.writeValueAsString(ListMap(Seq("metric" -> mode.metric) ++
       mode.fields(run) ++ Seq("rounds" -> mode.rounds,
@@ -288,20 +316,24 @@ object ScaleBench {
           Seq("rows" -> SparkEntry.queries(q)(spark, dir(shape)).count())))
       },
       fields = run => {
-        val e = queries.map(q => exponent(run.ratio(q), copies))
-        val eb = queries.map { q =>
+        // exponents of the queries that succeeded at both shapes; the
+        // summaries are null when none did
+        val ok = queries.filter(q =>
+          Seq("x1", xN).forall(run.timing(_, q).error.isEmpty))
+        val e = ok.map(q => exponent(run.ratio(q), copies))
+        val eb = ok.map { q =>
           val Seq(b1, bN) = Seq("x1", xN).map(run.timing(_, q).shuffleBytes)
           // undefined when a query never shuffles at x1
           if (b1 > 0 && bN > 0) exponent(bN.toDouble / b1, copies) else 0.0
         }
         def byQuery(xs: Seq[Double]) =
-          ListMap(queries.zip(xs.map(rounded(_, 3))): _*)
-        Seq("value" -> rounded(e.max, 3), "unit" -> "exponent",
-          "median_exponent" -> rounded(e.sorted.apply(e.size / 2), 3),
-          "max_shuffle_exponent" -> rounded(eb.max, 3),
+          ListMap(ok.zip(xs.map(rounded(_, 3))): _*)
+        Seq("value" -> e.maxOption.map(rounded(_, 3)), "unit" -> "exponent",
+          "median_exponent" -> e.sorted.lift(e.size / 2).map(rounded(_, 3)),
+          "max_shuffle_exponent" -> eb.maxOption.map(rounded(_, 3)),
           "copies" -> copies, "base" -> base,
           "offenders" ->
-            queries.indices.filter(i => (e(i) max eb(i)) > 1.3).map(queries),
+            ok.indices.filter(i => (e(i) max eb(i)) > 1.3).map(ok),
           "exponent" -> byQuery(e), "shuffle_exponent" -> byQuery(eb))
       },
       warmShape = Some("warm"), isolate = true,

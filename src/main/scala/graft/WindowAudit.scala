@@ -20,13 +20,11 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, Broadcast
   *     window *was* partitioned. Bounded-heap top-k aggregation
   *     ([[graft.functions.TopKAgg]]) is the replacement.
   *
-  * Plus a `>>> name` marker before each query at WARN log level, so
-  * WindowExec warnings from EAGER jobs inside query construction
-  * (percentile cutoffs, rank count jobs, iterative fits) — whose plans
-  * never appear in the returned frame — correlate to the query that
-  * ran them.
-  *
-  *   sbt "runMain graft.WindowAudit /root/testdata/sf0.001"
+  * `graft.Profile audit [q,…]` runs it over the registry, with a
+  * `>>> name` marker before each query so WindowExec warnings from EAGER
+  * jobs inside query construction (percentile cutoffs, rank count jobs,
+  * iterative fits) — whose plans never appear in the returned frame —
+  * correlate to the query that ran them.
   */
 object WindowAudit {
 
@@ -36,12 +34,9 @@ object WindowAudit {
     var out = Set.empty[Long]
     def walk(n: SparkPlan): Unit = {
       n match {
-        case b: BroadcastExchangeExec =>
-          out ++= b.output.map(_.exprId.id)
-        case b: BroadcastQueryStageExec =>
-          out ++= b.output.map(_.exprId.id)
-        case r: ReusedExchangeExec =>
-          out ++= r.output.map(_.exprId.id)
+        case _: BroadcastExchangeExec | _: BroadcastQueryStageExec |
+            _: ReusedExchangeExec =>
+          out ++= n.output.map(_.exprId.id)
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
         case _ =>
       }
@@ -76,29 +71,5 @@ object WindowAudit {
     }
     walk(plan)
     hits.distinct
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = Session.local(Session.cpus)
-    var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      // The WindowExec warning fires at execution, including eager jobs
-      // inside query construction — flush a marker first so pane output
-      // correlates warnings to the query that caused them.
-      println(s"[windowaudit] >>> $name"); Console.flush()
-      try {
-        val hits = auditPlan(fn(spark, sfDir).queryExecution.executedPlan)
-        if (hits.nonEmpty) {
-          bad += 1
-          println(s"[windowaudit] $name :: ${hits.mkString(" | ")}")
-        }
-      } catch {
-        case e: Throwable =>
-          println(s"[windowaudit] ERR $name ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-    }
-    println(s"[windowaudit] done ($bad flagged)")
-    spark.stop()
   }
 }

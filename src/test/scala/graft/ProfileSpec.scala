@@ -53,9 +53,20 @@ class ProfileSpec extends SparkSpec {
     assert(Files.readString(f).contains("== Physical Plan =="))
   }
 
+  test("audit mode prints the window audit of the named query") {
+    val out = profile("audit", q)
+    val lines = out.linesIterator.filter(_.startsWith("[windowaudit]"))
+      .toVector
+    assert(lines.head == s"[windowaudit] >>> $q", out)
+    assert(lines.last.matches("\\[windowaudit\\] done \\(\\d+ flagged\\)"), out)
+    assert(!lines.exists(_.contains(" ERR ")), out)
+  }
+
   test("a malformed command line is rejected before any work") {
     intercept[IllegalArgumentException](Profile.command(Seq("nope"), "", ""))
     intercept[IllegalArgumentException](
       Profile.command(Seq("plan", q, "--out"), "", ""))
+    intercept[IllegalArgumentException](
+      Profile.command(Seq("audit", q, "extra"), "", ""))
   }
 }

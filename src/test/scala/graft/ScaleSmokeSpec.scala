@@ -8,8 +8,9 @@ package graft
   * is NOT a near-duplicate of its source copy — and run two registered
   * queries end-to-end on the replica to prove the scaled dirs satisfy
   * the `Q.t` table contract. The runner every mode shares is driven with
-  * two stub shapes over `spark.range`, and `command` must reject a
-  * malformed command line before any work. */
+  * two stub shapes over `spark.range`, a stage that fails in one round and
+  * one that always fails, and `command` must reject a malformed command
+  * line before any work. */
 class ScaleSmokeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,6 +64,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // one sleep per timed stage run, in run order: each stage's two
     // rounds differ, and the one that did not sleep is the faster
     val sleeps = Iterator(500, 0, 0, 500, 500, 0, 0, 500)
+    var flakyRuns = 0
     val mode = ScaleBench.Mode("stub", Seq("a", "b"), 2,
       stages = (s, shape) => {
         calls += shape
@@ -73,7 +75,14 @@ class ScaleSmokeSpec extends SparkSpec {
           val df = s.range(n)
           Seq("rows" -> (if (name == "scan") df.count()
             else df.groupBy(df("id") % 7).count().count()))
-        }))
+        })) ++ Seq(
+          // fails in the first timed round only
+          ScaleBench.Stage("flaky", () => {
+            if (shape != "warm") flakyRuns += 1
+            if (flakyRuns <= 1) sys.error("flaky round")
+            Seq("rows" -> s.range(10).count())
+          }),
+          ScaleBench.Stage("broken", () => sys.error("always broken")))
       },
       fields = run => Seq("value" -> run.ratio("agg")),
       warmShape = Some("warm"))
@@ -89,6 +98,17 @@ class ScaleSmokeSpec extends SparkSpec {
     assert(run.ratio("agg") == r)
     assert(ScaleBench.exponent(r, 10) == math.log(r) / math.log(10))
     assert(run.timing("b", "agg").counts == Seq("rows" -> 7L))
+    // the failed round is recorded, and best skips it
+    val flaky = run.rounds.map(_._2.toMap.apply("flaky"))
+    assert(flaky.map(_.error) ==
+      Seq(Some("flaky round"), None, None, None), flaky)
+    assert(flaky.head.counts.isEmpty)
+    assert(run.timing("a", "flaky") == flaky(3))
+    assert(run.timing("a", "flaky").counts == Seq("rows" -> 10L))
+    Seq("a", "b").foreach { shape =>
+      val t = run.timing(shape, "broken")
+      assert(t.error.contains("always broken") && t.counts.isEmpty, t)
+    }
 
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(ScaleBench.line(mode, run))
@@ -101,6 +121,14 @@ class ScaleSmokeSpec extends SparkSpec {
         .foreach(k => assert(e.get(k).isNumber, s"$shape/$stage/$k in $json"))
       assert(e.get("jobs").asInt >= 1, json)
       assert(e.get("warmup_error").asText.contains(s"warm-up of $stage"))
+      assert(!e.has("error"), json)
+    }
+    for (shape <- Seq("a", "b")) {
+      assert(!json.get(shape).get("flaky").has("error"), json)
+      assert(json.get(shape).get("flaky").get("rows").asInt == 10, json)
+      val broken = json.get(shape).get("broken")
+      assert(broken.get("error").asText == "always broken", json)
+      assert(!broken.has("rows") && broken.get("wall").isNumber, json)
     }
   }
 
