@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast,
-  Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator,
+  CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   FloatType, IntegerType, LongType, StringType}
@@ -338,8 +339,9 @@ object HashFuncs {
     * shift/mask arithmetic — replayable bit-for-bit in any engine.
     *
     * `bits` is validated in [1, 32] at expression-construction time
-    * ([[Expressions.ZOrder2]]): two 33-bit lanes can't interleave into
-    * one long, and Java wraps shift counts mod 64 so bits > 32 would
+    * (the zorder2 row of [[Expressions.kernels]]): two 33-bit lanes
+    * can't interleave into one long, and Java wraps shift counts mod 64
+    * so bits > 32 would
     * SILENTLY scatter bits into wrong positions rather than fail. Input
     * bits at position >= `bits` are ignored (values alias mod 2^bits) —
     * callers clustering wider domains must pre-scale into the box. */
@@ -644,496 +646,124 @@ object HashFuncs {
   }
 }
 
-/** Custom Catalyst expressions (SURVEY.md §4.3): the normal-distribution
-  * kernels Spark SQL lacks, as codegen-native `Expression`s rather than
-  * UDFs — they stay inside whole-stage codegen in the NOOB/pOOBAH hot
-  * paths (the generated code calls the static Scala kernels directly, no
-  * boxing, no serialization).
+/** graft's per-row kernels as Catalyst expressions (SURVEY.md §4.3): the
+  * normal-distribution, Student-t, ECDF, hash, vector and perceptual-hash
+  * numerics Spark SQL lacks, codegen-native rather than UDFs, so they
+  * stay inside whole-stage codegen on the hot paths (the generated code
+  * calls the static Scala kernel directly: no boxing, no serialization).
+  *
+  * One expression class, [[Expressions.Kernel]], runs every kernel, and
+  * one table, [[Expressions.kernels]], defines them: per kernel its name
+  * (SQL name and `prettyName`), the static method the generated code
+  * calls, the result type, the accepted argument types with the cast the
+  * callers apply, and the interpreted call. The Column helpers below and
+  * the [[Expressions.sqlFunctions]] entries are derived from the table.
+  * Integer parameters (k, numHashes, dim, bits, w, h) are fields of the
+  * expression, so equality and CSE key on them; the MinHash `(as, bs)`
+  * and SRP `signs` arrays are computed from them once per expression and
+  * passed to the kernel by reference.
+  *
+  * Not Spark's `StaticInvoke`: it stages every argument through a field
+  * array, and a prototype of the kernels on it ran `vec_sqdist` 30%
+  * slower (4 cores, 4M cached rows, `agg(sum(kernel))`: 0.276 → 0.360 s,
+  * 12 alternating pairs). [[Expressions.Kernel]] emits the direct
+  * `HashFuncs$.MODULE$.fn(args)` / `StatFuncs$…` call.
   */
 object Expressions {
-
-  private val kernel = "graft.functions.StatFuncs"
-
-  /** Children are always cast to double at the column-function layer. */
-  abstract class DoubleKernel extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    def fn: String // static method on StatFuncs
-    override def nullSafeEval(v: Any): Any = call(v.asInstanceOf[Double])
-    def call(v: Double): Double
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$kernel$$.MODULE$$.$fn($c)")
-  }
-
-  /** erfc(x) — double precision (SPECFUN rational approximations). */
-  case class Erfc(child: Expression) extends DoubleKernel {
-    override def fn: String = "erfc"
-    override def call(v: Double): Double = StatFuncs.erfc(v)
-    override protected def withNewChildInternal(c: Expression): Erfc = copy(c)
-  }
-
-  /** log(1 − Φ(z)) — stable in the deep tail via erfcx scaling. */
-  case class NormLogSf(child: Expression) extends DoubleKernel {
-    override def fn: String = "normLogSf"
-    override def call(v: Double): Double = StatFuncs.normLogSf(v)
-    override protected def withNewChildInternal(c: Expression): NormLogSf =
-      copy(c)
-  }
-
-  /** Φ⁻¹(p) — Acklam + Halley refinement. */
-  case class NormInv(child: Expression) extends DoubleKernel {
-    override def fn: String = "normInv"
-    override def call(v: Double): Double = StatFuncs.normInv(v)
-    override protected def withNewChildInternal(c: Expression): NormInv =
-      copy(c)
-  }
-
-  /** t_two_sided_p(t, dof) — two-sided Student-t survival (the A&S
-    * 26.7.3/26.7.4 finite recurrences, exact for integer dof; see
-    * StatFuncs.tTwoSidedP). Codegen'd so the per-probe OLS fast path
-    * stays a pure whole-stage-codegen pipeline. */
-  case class TTwoSidedP(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(t: Any, d: Any): Any =
-      StatFuncs.tTwoSidedP(t.asInstanceOf[Double], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (t, d) => s"$kernel$$.MODULE$$.tTwoSidedP($t, $d)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): TTwoSidedP = copy(left = l, right = r)
-  }
-
-  /** ecdf_count(sorted, v) — #(elements ≤ v) of a null-free ascending
-    * array<double> by binary search (StatFuncs.ecdfCount, Spark's double
-    * ordering). Null when either input is null. The per-row lookup of
-    * [[graft.operators.Ecdf]]; a Column helper only, no SQL name. */
-  case class EcdfCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), DoubleType) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (a, b) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"ecdf_count requires (ARRAY<DOUBLE>, DOUBLE), got " +
-              s"(${a.sql}, ${b.sql})")
-      }
-    override def nullSafeEval(a: Any, v: Any): Any =
-      StatFuncs.ecdfCount(a.asInstanceOf[ArrayData], v.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, v) => s"$kernel$$.MODULE$$.ecdfCount($a, $v)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): EcdfCount = copy(left = l, right = r)
-  }
-
-  /** poly_hash64(str) — portable Rabin-Karp 64-bit fingerprint (see
-    * HashFuncs.polyHash64). Backs MinHash / SimHash / rolling-hash dedup
-    * so their whole hash families stay DuckDB-oracle-checkable. */
-  case class PolyHash64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"poly_hash64 requires STRING, got ${child.dataType.sql}")
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.polyHash64(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.HashFuncs$$.MODULE$$.polyHash64($c)")
-    override protected def withNewChildInternal(c: Expression): PolyHash64 =
-      copy(c)
-  }
-
-  /** Base for string→X kernels (all dedup hash expressions). */
-  abstract class StringKernel extends UnaryExpression {
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires STRING, got ${child.dataType.sql}")
-  }
-
-  private val hk = "graft.functions.HashFuncs$.MODULE$"
-
-  /** token_hashes(str) — poly_hash64 of every whitespace token, one tight
-    * byte loop instead of transform(split(...)) (interpreted HOFs are
-    * ~10× slower than this codegen path on the documents corpus). */
-  case class TokenHashes(child: Expression) extends StringKernel {
-    override def dataType: DataType = ArrayType(LongType, false)
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.tokenHashes(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.tokenHashes($c)")
-    override protected def withNewChildInternal(c: Expression): TokenHashes =
-      copy(c)
-  }
-
-  /** word_shingle_hashes(str, k) — distinct poly_hash64 of word k-grams
-    * (contiguous-span fold; see HashFuncs.wordShingleHashes). */
-  case class WordShingleHashes(child: Expression, k: Int)
-      extends StringKernel {
-    override def dataType: DataType = ArrayType(LongType, false)
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.wordShingleHashes(v.asInstanceOf[UTF8String], k)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.wordShingleHashes($c, $k)")
-    override protected def withNewChildInternal(
-        c: Expression): WordShingleHashes = copy(child = c)
-  }
-
-  /** word_shingle_hashes_at(str, k) — positional word-k-gram hashes
-    * (ordered, duplicates kept; HashFuncs.wordShingleHashesAt). */
-  case class WordShingleHashesAt(child: Expression, k: Int)
-      extends StringKernel {
-    override def dataType: DataType = ArrayType(LongType, false)
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.wordShingleHashesAt(v.asInstanceOf[UTF8String], k)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.wordShingleHashesAt($c, $k)")
-    override protected def withNewChildInternal(
-        c: Expression): WordShingleHashesAt = copy(child = c)
-  }
-
-  /** gram_repetition(str, n) — Gopher-style repetition signals
-    * [top_frac, dup_frac, n_grams] in one pass (HashFuncs doc). */
-  case class GramRepetition(child: Expression, n: Int)
-      extends StringKernel {
-    override def dataType: DataType = ArrayType(DoubleType, false)
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.gramRepetition(v.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.gramRepetition($c, $n)")
-    override protected def withNewChildInternal(
-        c: Expression): GramRepetition = copy(child = c)
-  }
-
-  /** normalize_text(str) — control/zero-width strip, then NFC, then
-    * space collapse + trim, in one codegen pass (strip precedes
-    * composition so the map is idempotent; HashFuncs.normalizeText). */
-  case class NormalizeText(child: Expression) extends StringKernel {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.normalizeText(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.normalizeText($c)")
-    override protected def withNewChildInternal(
-        c: Expression): NormalizeText = copy(c)
-  }
-
-  /** strip_markup(str) — markup → text extraction (script/style/comment
-    * drop, tag-to-space, core entity decode, whitespace collapse); the
-    * exact chain HashFuncs.stripMarkup documents and the q163 oracle
-    * replays. */
-  case class StripMarkup(child: Expression) extends StringKernel {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.stripMarkup(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.stripMarkup($c)")
-    override protected def withNewChildInternal(
-        c: Expression): StripMarkup = copy(c)
-  }
-
-  /** script_profile(str) — 7-slot Unicode-script codepoint census
-    * [latin, cyrillic, han, greek, arabic, hangul, other] in one
-    * surrogate-aware pass (HashFuncs.scriptProfile); the q165 oracle
-    * replays each slot with RE2 script classes. */
-  case class ScriptProfile(child: Expression) extends StringKernel {
-    override def dataType: DataType = ArrayType(LongType, false)
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.scriptProfile(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.scriptProfile($c)")
-    override protected def withNewChildInternal(
-        c: Expression): ScriptProfile = copy(c)
-  }
-
-  /** simhash64(str) — whole-document 64-bit SimHash in one pass. */
-  case class SimHash64(child: Expression) extends StringKernel {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.simHash64(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.simHash64($c)")
-    override protected def withNewChildInternal(c: Expression): SimHash64 =
-      copy(c)
-  }
-
-  /** minhash_sig(str, k, numHashes) — full MinHash signature in one pass
-    * over the shingles; null when the document has < k tokens. */
-  case class MinHashSig(child: Expression, k: Int, numHashes: Int)
-      extends StringKernel {
-    private lazy val (as, bs) = HashFuncs.mixConstants(numHashes)
-    override def dataType: DataType = ArrayType(LongType, false)
-    override def nullable: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.minHashSig(v.asInstanceOf[UTF8String], k, as, bs)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode = {
-      val asRef = ctx.addReferenceObj("mhAs", as, "long[]")
-      val bsRef = ctx.addReferenceObj("mhBs", bs, "long[]")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = $hk.minHashSig($c, $k, $asRef, $bsRef);
-        ${ev.isNull} = (${ev.value} == null);
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): MinHashSig =
-      copy(child = c)
-  }
-
-  /** srp_sketch64(array<double>, dim) — signed-random-projection sketch;
-    * hyperplanes derived from splitmix64, shared with the DuckDB oracle
-    * replay. */
-  case class SrpSketch64(child: Expression, dim: Int)
-      extends UnaryExpression {
-    private lazy val signs = HashFuncs.srpSigns(64, dim)
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.srpSketch64(v.asInstanceOf[ArrayData], signs)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode = {
-      val signsRef = ctx.addReferenceObj("srpSigns", signs, "double[]")
-      defineCodeGen(ctx, ev, c => s"$hk.srpSketch64($c, $signsRef)")
-    }
-    override protected def withNewChildInternal(c: Expression): SrpSketch64 =
-      copy(child = c)
-  }
-
-  /** vec_dot(array<double>, array<double>) — sequential dot product as a
-    * single codegen loop (bit-identical to the aggregate/zip_with fold it
-    * replaces; see HashFuncs.vecDot). */
-  case class VecDot(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.vecDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.vecDot($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): VecDot = copy(left = l, right = r)
-  }
-
-  /** vec_cosine(array<double>, array<double>) — fused cosine similarity,
-    * dot / (‖a‖·‖b‖) with sequential folds (HashFuncs.vecCosine). */
-  case class VecCosine(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.vecCosine(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.vecCosine($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): VecCosine = copy(left = l, right = r)
-  }
-
-  /** rolling_hash31(str) — Rabin-Karp base-31 mod 1e9+7 fingerprint as
-    * one codegen byte loop. */
-  case class RollingHash31(child: Expression) extends StringKernel {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.rollingHash31(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.rollingHash31($c)")
-    override protected def withNewChildInternal(
-        c: Expression): RollingHash31 = copy(c)
-  }
-
-  /** sorted_intersect_count(array<long>, array<long>) — merge-scan
-    * intersection size of two sorted arrays as one codegen loop. */
-  case class SortedIntersectCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.sortedIntersectCount(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.sortedIntersectCount($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): SortedIntersectCount = copy(left = l, right = r)
-  }
-
-  /** long_eq_frac(array<long>, array<long>) — MinHash signature
-    * agreement fraction as one codegen loop. */
-  case class LongEqFrac(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.longEqFrac(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.longEqFrac($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): LongEqFrac = copy(left = l, right = r)
-  }
-
-  /** vec_sqdist(array<double>, array<double>) — squared Euclidean
-    * distance, null elements contribute zero (DMR probe distance). */
-  case class VecSqDist(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.vecSqDist(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.vecSqDist($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): VecSqDist = copy(left = l, right = r)
-  }
-
-  /** zorder2(a, b, bits) — Morton interleave of the low `bits` bits
-    * (HashFuncs.zorder2): the clustering key for Z-ordered data layout.
-    * Codegen'd shift/mask loop; inputs cast to long at the column layer. */
-  case class ZOrder2(left: Expression, right: Expression, bits: Int)
-      extends BinaryExpression {
-    require(bits >= 1 && bits <= 32,
-      s"zorder2 bits must be in [1,32], got $bits (shift counts wrap " +
-        "mod 64 above 32, silently corrupting the interleave)")
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashFuncs.zorder2(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$hk.zorder2($a, $b, $bits)")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): ZOrder2 = copy(left = l, right = r)
-  }
-
-  /** ahash64(levels, w, h) / dhash64(levels, w, h) — perceptual-hash
-    * pooling kernels over array<long> pixel levels; see
-    * HashFuncs.{aHash64,dHash64} for semantics and the divisibility /
-    * non-null / ≤ 2^24 level contract. */
-  abstract class PixelHashKernel extends UnaryExpression {
-    def w: Int
-    def h: Int
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-            .TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-            .TypeCheckFailure(
-              s"$prettyName requires ARRAY<BIGINT>, got ${other.sql}")
-      }
-  }
-
-  case class AHash64(child: Expression, w: Int, h: Int)
-      extends PixelHashKernel {
-    require(w % 8 == 0 && h % 8 == 0,
-      s"ahash64 needs dimensions divisible by 8, got ${w}x$h")
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.aHash64(v.asInstanceOf[ArrayData], w, h)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.aHash64($c, $w, $h)")
-    override protected def withNewChildInternal(c: Expression): AHash64 =
-      copy(child = c)
-  }
-
-  case class DHash64(child: Expression, w: Int, h: Int)
-      extends PixelHashKernel {
-    require(w % 9 == 0 && h % 8 == 0,
-      s"dhash64 needs width divisible by 9 and height by 8, got ${w}x$h")
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.dHash64(v.asInstanceOf[ArrayData], w, h)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.dHash64($c, $w, $h)")
-    override protected def withNewChildInternal(c: Expression): DHash64 =
-      copy(child = c)
-  }
-
-  /** energy_profile64(samples) — the 64-segment quantized audio energy
-    * profile (HashFuncs.energyProfile64) as one codegen pass; accepts
-    * ARRAY<FLOAT> (the decoder's native sample type) or ARRAY<DOUBLE>.
-    * Null elements read as 0 amplitude (silence) — the decoder contract
-    * never emits them. */
-  case class EnergyProfile64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, false)
-    private def isFloat: Boolean =
-      child.dataType == ArrayType(FloatType, false) ||
-        child.dataType == ArrayType(FloatType, true)
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-            .TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-            .TypeCheckFailure(
-              s"$prettyName requires ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-                s"got ${other.sql}")
-      }
-    override def nullSafeEval(v: Any): Any =
-      HashFuncs.energyProfile64(v.asInstanceOf[ArrayData], isFloat)
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$hk.energyProfile64($c, $isFloat)")
-    override protected def withNewChildInternal(
-        c: Expression): EnergyProfile64 = copy(c)
-  }
-
   import GraftBridge.{column, expression}
+
+  /** One kernel: its name; the static method the generated code calls;
+    * the result type; per argument, the accepted type and the cast the
+    * Column helper and the SQL call apply; the interpreted call over the
+    * argument values followed by the extras; the names of the integer
+    * parameters; the extras, the trailing kernel arguments made from the
+    * parameters and the argument types (default: the parameters); the
+    * parameter check run at construction; whether a non-null input can
+    * give null; whether it has a SQL name. */
+  final case class KernelSpec(name: String, method: String,
+      dataType: DataType,
+      args: Seq[(Seq[DataType], Expression => Expression)],
+      call: Seq[Any] => Any, params: Seq[String] = Nil,
+      extras: (Seq[Int], Seq[DataType]) => Seq[Any] = (p, _) => p,
+      check: Seq[Int] => Unit = _ => (), nullable: Boolean = false,
+      sql: Boolean = true)
+
+  /** The one kernel expression: `name`'s spec over `children` with the
+    * integer parameters `params`. Null in any argument gives null. */
+  case class Kernel(name: String, children: Seq[Expression],
+      params: Seq[Int] = Nil)
+      extends Expression with GraftBridge.AcceptsTypes {
+    @transient private lazy val spec = kernelSpecs(name)
+    require(children.length == spec.args.length &&
+      params.length == spec.params.length,
+      s"$name takes ${spec.args.length} arguments and the parameters " +
+        s"(${spec.params.mkString(", ")})")
+    spec.check(params)
+    private lazy val extras = spec.extras(params, children.map(_.dataType))
+    override def prettyName: String = name
+    override def dataType: DataType = spec.dataType
+    override def nullable: Boolean =
+      spec.nullable || children.exists(_.nullable)
+    override def foldable: Boolean = children.forall(_.foldable)
+    override def accepted: Seq[Seq[DataType]] = spec.args.map(_._1)
+    override protected def stringArgs: Iterator[Any] =
+      children.iterator ++ params
+
+    override def eval(input: InternalRow): Any = {
+      val values = new Array[Any](children.length)
+      var i = 0
+      while (i < values.length) {
+        values(i) = children(i).eval(input)
+        if (values(i) == null) return null
+        i += 1
+      }
+      spec.call(values.toSeq ++ extras)
+    }
+
+    /** Spark's unary and binary null-safe codegen, for any arity: each
+      * argument is computed only when the ones before it are non-null. */
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode = {
+      val gens = children.map(_.genCode(ctx))
+      val args = gens.map(_.value.toString) ++ extras.map {
+        case a: Array[Long] => ctx.addReferenceObj(name, a, "long[]")
+        case a: Array[Double] => ctx.addReferenceObj(name, a, "double[]")
+        case v => v.toString
+      }
+      val init = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+        s"${CodeGenerator.defaultValue(dataType)};"
+      val call = s"${ev.value} = ${spec.method}(${args.mkString(", ")});" +
+        (if (spec.nullable) s"\n${ev.isNull} = ${ev.value} == null;" else "")
+      val code =
+        if (!nullable) s"${gens.map(_.code).mkString("\n")}\n$init\n$call"
+        else if (children.length == 1)
+          s"${gens(0).code}\nboolean ${ev.isNull} = ${gens(0).isNull};\n" +
+            s"$init\n" +
+            ctx.nullSafeExec(children(0).nullable, gens(0).isNull)(call)
+        else s"boolean ${ev.isNull} = true;\n$init\n" +
+          gens.indices.foldRight(s"${ev.isNull} = false;\n$call") {
+            (i, in) => s"${gens(i).code}\n" +
+              ctx.nullSafeExec(children(i).nullable, gens(i).isNull)(in)
+          }
+      ev.copy(code = code"$code",
+        isNull = if (nullable) ev.isNull else FalseLiteral)
+    }
+
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): Kernel = copy(children = c)
+  }
+
+  /** A kernel over its argument expressions, each cast as its spec says. */
+  private def call(name: String, args: Seq[Expression],
+      params: Seq[Int] = Nil): Kernel =
+    Kernel(name, kernelSpecs(name).args.zip(args).map {
+      case ((_, cast), e) => cast(e)
+    }, params)
 
   /** Children are cast to double explicitly (the kernels are
     * double-only and don't participate in implicit coercion). */
   def toD(e: Expression): Expression =
     if (e.dataType == DoubleType) e else Cast(e, DoubleType)
-
-  def erfc(c: Column): Column = column(Erfc(toD(expression(c))))
-  def normLogSf(c: Column): Column = column(NormLogSf(toD(expression(c))))
-  def normInv(c: Column): Column = column(NormInv(toD(expression(c))))
-  def tTwoSidedP(t: Column, dof: Column): Column =
-    column(TTwoSidedP(toD(expression(t)),
-      Cast(expression(dof), IntegerType)))
-  def polyHash64(c: Column): Column = column(PolyHash64(expression(c)))
-  def tokenHashes(c: Column): Column = column(TokenHashes(expression(c)))
-  def wordShingleHashes(c: Column, k: Int): Column =
-    column(WordShingleHashes(expression(c), k))
-  def wordShingleHashesAt(c: Column, k: Int): Column =
-    column(WordShingleHashesAt(expression(c), k))
-  def simHash64(c: Column): Column = column(SimHash64(expression(c)))
-  def normalizeText(c: Column): Column =
-    column(NormalizeText(expression(c)))
-  def stripMarkup(c: Column): Column =
-    column(StripMarkup(expression(c)))
-  def scriptProfile(c: Column): Column =
-    column(ScriptProfile(expression(c)))
-  def gramRepetition(c: Column, n: Int): Column =
-    column(GramRepetition(expression(c), n))
-  def minHashSig(c: Column, k: Int, numHashes: Int): Column =
-    column(MinHashSig(expression(c), k, numHashes))
-  def srpSketch64(c: Column, dim: Int): Column =
-    column(SrpSketch64(expression(c), dim))
 
   /** Cast a SQL argument to array<double> (the vector kernels are
     * double-only). */
@@ -1141,37 +771,172 @@ object Expressions {
     if (e.dataType == ArrayType(DoubleType)) e
     else Cast(e, ArrayType(DoubleType))
 
-  def vecDot(a: Column, b: Column): Column =
-    column(VecDot(toAD(expression(a)), toAD(expression(b))))
-  def vecCosine(a: Column, b: Column): Column =
-    column(VecCosine(toAD(expression(a)), toAD(expression(b))))
-  def longEqFrac(a: Column, b: Column): Column =
-    column(LongEqFrac(expression(a), expression(b)))
-  def rollingHash31(c: Column): Column =
-    column(RollingHash31(expression(c)))
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    column(SortedIntersectCount(expression(a), expression(b)))
-  def vecSqDist(a: Column, b: Column): Column =
-    column(VecSqDist(toAD(expression(a)), toAD(expression(b))))
-
-  /** `sorted` is passed uncast (EcdfCount checks it is array<double>):
-    * a cast would copy the array on every row. */
-  def ecdfCount(sorted: Column, v: Column): Column =
-    column(EcdfCount(expression(sorted), Cast(expression(v), DoubleType)))
-
   /** Cast a SQL argument to long (the Z-order kernel is long-only). */
   def toL(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)
 
-  def zorder2(a: Column, b: Column, bits: Int): Column =
-    column(ZOrder2(toL(expression(a)), toL(expression(b)), bits))
+  private def stat(m: String) = s"graft.functions.StatFuncs$$.MODULE$$.$m"
+  private def hash(m: String) = s"graft.functions.HashFuncs$$.MODULE$$.$m"
+  private val dbl = (Seq(DoubleType), toD _)
+  private val str = (Seq(StringType), identity[Expression] _)
+  private val vec = (Seq(ArrayType(DoubleType)), toAD _)
+  private val longs = (Seq(ArrayType(LongType)), identity[Expression] _)
+  private val longArr = ArrayType(LongType, false)
 
+  // the interpreted call of an n-argument kernel method
+  private def f1[A](f: A => Any): Seq[Any] => Any =
+    a => f(a(0).asInstanceOf[A])
+  private def f2[A, B](f: (A, B) => Any): Seq[Any] => Any =
+    a => f(a(0).asInstanceOf[A], a(1).asInstanceOf[B])
+  private def f3[A, B, C](f: (A, B, C) => Any): Seq[Any] => Any =
+    a => f(a(0).asInstanceOf[A], a(1).asInstanceOf[B], a(2).asInstanceOf[C])
+  private def f4[A, B, C, D](f: (A, B, C, D) => Any): Seq[Any] => Any =
+    a => f(a(0).asInstanceOf[A], a(1).asInstanceOf[B], a(2).asInstanceOf[C],
+      a(3).asInstanceOf[D])
+
+  /** Every kernel; the kernel methods' scaladoc has the semantics. */
+  val kernels: Seq[KernelSpec] = Seq(
+    // erfc(x), SPECFUN rational approximations
+    KernelSpec("erfc", stat("erfc"), DoubleType, Seq(dbl),
+      f1(StatFuncs.erfc)),
+    // log(1 − Φ(z)), stable in the deep tail via erfcx scaling
+    KernelSpec("norm_log_sf", stat("normLogSf"), DoubleType, Seq(dbl),
+      f1(StatFuncs.normLogSf)),
+    // Φ⁻¹(p), Acklam + one Halley step
+    KernelSpec("norm_inv", stat("normInv"), DoubleType, Seq(dbl),
+      f1(StatFuncs.normInv)),
+    // two-sided Student-t survival: DMP's per-probe OLS p-value
+    KernelSpec("t_two_sided_p", stat("tTwoSidedP"), DoubleType,
+      Seq(dbl, (Seq(IntegerType), Cast(_, IntegerType))),
+      f2(StatFuncs.tTwoSidedP), sql = false),
+    // #(elements ≤ v) of a null-free ascending array<double>: pOOBAH's
+    // lookup. `sorted` is not cast: a cast would copy it on every row
+    KernelSpec("ecdf_count", stat("ecdfCount"), IntegerType,
+      Seq((Seq(ArrayType(DoubleType)), identity),
+        (Seq(DoubleType), Cast(_, DoubleType))),
+      f2(StatFuncs.ecdfCount(_: ArrayData, _: Double)), sql = false),
+    // portable Rabin-Karp 64-bit fingerprint behind the dedup hashes
+    KernelSpec("poly_hash64", hash("polyHash64"), LongType, Seq(str),
+      f1(HashFuncs.polyHash64)),
+    // poly_hash64 of every whitespace token
+    KernelSpec("token_hashes", hash("tokenHashes"), longArr, Seq(str),
+      f1(HashFuncs.tokenHashes)),
+    // distinct poly_hash64 of the word k-grams
+    KernelSpec("word_shingle_hashes", hash("wordShingleHashes"), longArr,
+      Seq(str), f2(HashFuncs.wordShingleHashes), Seq("k")),
+    // word k-gram hashes in order, duplicates kept
+    KernelSpec("word_shingle_hashes_at", hash("wordShingleHashesAt"),
+      longArr, Seq(str), f2(HashFuncs.wordShingleHashesAt), Seq("k"),
+      sql = false),
+    // [top_frac, dup_frac, n_grams] of the word n-grams
+    KernelSpec("gram_repetition", hash("gramRepetition"),
+      ArrayType(DoubleType, false), Seq(str),
+      f2(HashFuncs.gramRepetition), Seq("n")),
+    // control strip, NFC, space collapse and trim
+    KernelSpec("normalize_text", hash("normalizeText"), StringType,
+      Seq(str), f1(HashFuncs.normalizeText)),
+    // markup → text, the chain the q163 oracle replays
+    KernelSpec("strip_markup", hash("stripMarkup"), StringType, Seq(str),
+      f1(HashFuncs.stripMarkup)),
+    // 7-slot Unicode-script codepoint census
+    KernelSpec("script_profile", hash("scriptProfile"), longArr, Seq(str),
+      f1(HashFuncs.scriptProfile)),
+    KernelSpec("simhash64", hash("simHash64"), LongType, Seq(str),
+      f1(HashFuncs.simHash64)),
+    // MinHash signature; null below k tokens
+    KernelSpec("minhash_sig", hash("minHashSig"), longArr, Seq(str),
+      f4(HashFuncs.minHashSig), Seq("k", "numHashes"), (p, _) => {
+        val (as, bs) = HashFuncs.mixConstants(p(1))
+        Seq(p(0), as, bs)
+      }, nullable = true),
+    // signed-random-projection sketch over splitmix64 hyperplanes
+    KernelSpec("srp_sketch64", hash("srpSketch64"), LongType,
+      Seq((Seq(ArrayType(DoubleType)), identity)), f2(HashFuncs.srpSketch64),
+      Seq("dim"), (p, _) => Seq(HashFuncs.srpSigns(64, p(0)))),
+    KernelSpec("vec_dot", hash("vecDot"), DoubleType, Seq(vec, vec),
+      f2(HashFuncs.vecDot)),
+    KernelSpec("vec_cosine", hash("vecCosine"), DoubleType, Seq(vec, vec),
+      f2(HashFuncs.vecCosine)),
+    // squared distance, null elements contribute 0: DMR's probe distance
+    KernelSpec("vec_sqdist", hash("vecSqDist"), DoubleType, Seq(vec, vec),
+      f2(HashFuncs.vecSqDist)),
+    // Rabin-Karp base 31 mod 1e9+7
+    KernelSpec("rolling_hash31", hash("rollingHash31"), LongType, Seq(str),
+      f1(HashFuncs.rollingHash31)),
+    // merge-scan intersection size of two sorted arrays
+    KernelSpec("sorted_intersect_count", hash("sortedIntersectCount"),
+      LongType, Seq(longs, longs), f2(HashFuncs.sortedIntersectCount),
+      sql = false),
+    // MinHash signature agreement fraction
+    KernelSpec("long_eq_frac", hash("longEqFrac"), DoubleType,
+      Seq(longs, longs), f2(HashFuncs.longEqFrac)),
+    // Morton interleave of the low `bits` bits
+    KernelSpec("zorder2", hash("zorder2"), LongType,
+      Seq((Seq(LongType), toL _), (Seq(LongType), toL _)),
+      f3(HashFuncs.zorder2),
+      Seq("bits"), check = p => require(p(0) >= 1 && p(0) <= 32,
+        s"zorder2 bits must be in [1,32], got ${p(0)} (shift counts wrap " +
+          "mod 64 above 32, silently corrupting the interleave)")),
+    // perceptual hashes over array<bigint> pixel levels
+    KernelSpec("ahash64", hash("aHash64"), LongType, Seq(longs),
+      f3(HashFuncs.aHash64), Seq("w", "h"), check = p =>
+        require(p(0) % 8 == 0 && p(1) % 8 == 0,
+          s"ahash64 needs dimensions divisible by 8, got ${p(0)}x${p(1)}")),
+    KernelSpec("dhash64", hash("dHash64"), LongType, Seq(longs),
+      f3(HashFuncs.dHash64), Seq("w", "h"), check = p =>
+        require(p(0) % 9 == 0 && p(1) % 8 == 0,
+          "dhash64 needs width divisible by 9 and height by 8, got " +
+            s"${p(0)}x${p(1)}")),
+    // 64-segment audio energy profile over float or double samples
+    KernelSpec("energy_profile64", hash("energyProfile64"), longArr,
+      Seq((Seq(ArrayType(FloatType), ArrayType(DoubleType)), identity)),
+      f2(HashFuncs.energyProfile64),
+      extras = (_, ts) =>
+        Seq(ts.head.asInstanceOf[ArrayType].elementType == FloatType)))
+
+  private val kernelSpecs = kernels.map(k => k.name -> k).toMap
+
+  private def kernel(name: String, params: Int*)(args: Column*): Column =
+    column(call(name, args.map(expression), params))
+
+  def erfc(c: Column): Column = kernel("erfc")(c)
+  def normLogSf(c: Column): Column = kernel("norm_log_sf")(c)
+  def normInv(c: Column): Column = kernel("norm_inv")(c)
+  def tTwoSidedP(t: Column, dof: Column): Column =
+    kernel("t_two_sided_p")(t, dof)
+  def ecdfCount(sorted: Column, v: Column): Column =
+    kernel("ecdf_count")(sorted, v)
+  def polyHash64(c: Column): Column = kernel("poly_hash64")(c)
+  def tokenHashes(c: Column): Column = kernel("token_hashes")(c)
+  def wordShingleHashes(c: Column, k: Int): Column =
+    kernel("word_shingle_hashes", k)(c)
+  def wordShingleHashesAt(c: Column, k: Int): Column =
+    kernel("word_shingle_hashes_at", k)(c)
+  def gramRepetition(c: Column, n: Int): Column =
+    kernel("gram_repetition", n)(c)
+  def normalizeText(c: Column): Column = kernel("normalize_text")(c)
+  def stripMarkup(c: Column): Column = kernel("strip_markup")(c)
+  def scriptProfile(c: Column): Column = kernel("script_profile")(c)
+  def simHash64(c: Column): Column = kernel("simhash64")(c)
+  def minHashSig(c: Column, k: Int, numHashes: Int): Column =
+    kernel("minhash_sig", k, numHashes)(c)
+  def srpSketch64(c: Column, dim: Int): Column =
+    kernel("srp_sketch64", dim)(c)
+  def vecDot(a: Column, b: Column): Column = kernel("vec_dot")(a, b)
+  def vecCosine(a: Column, b: Column): Column = kernel("vec_cosine")(a, b)
+  def vecSqDist(a: Column, b: Column): Column = kernel("vec_sqdist")(a, b)
+  def rollingHash31(c: Column): Column = kernel("rolling_hash31")(c)
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    kernel("sorted_intersect_count")(a, b)
+  def longEqFrac(a: Column, b: Column): Column = kernel("long_eq_frac")(a, b)
+  def zorder2(a: Column, b: Column, bits: Int): Column =
+    kernel("zorder2", bits)(a, b)
   def aHash64(levels: Column, w: Int, h: Int): Column =
-    column(AHash64(expression(levels), w, h))
+    kernel("ahash64", w, h)(levels)
   def dHash64(levels: Column, w: Int, h: Int): Column =
-    column(DHash64(expression(levels), w, h))
+    kernel("dhash64", w, h)(levels)
   def energyProfile64(samples: Column): Column =
-    column(EnergyProfile64(expression(samples)))
+    kernel("energy_profile64")(samples)
 
   /** One SQL function: its name, the expression class its
     * `ExpressionInfo` names, and the builder over the call's argument
@@ -1179,52 +944,15 @@ object Expressions {
   final case class SqlFunction(name: String, cls: Class[_ <: Expression],
       build: Seq[Expression] => Expression)
 
-  /** graft's SQL surface, one entry per name. [[GraftExtensions]]
-    * injects every entry into each session built with it. */
-  val sqlFunctions: Seq[SqlFunction] = Seq(
-    SqlFunction("erfc", classOf[Erfc], es => Erfc(toD(es.head))),
-    SqlFunction("norm_log_sf", classOf[NormLogSf],
-      es => NormLogSf(toD(es.head))),
-    SqlFunction("norm_inv", classOf[NormInv], es => NormInv(toD(es.head))),
-    SqlFunction("poly_hash64", classOf[PolyHash64],
-      es => PolyHash64(es.head)),
-    SqlFunction("token_hashes", classOf[TokenHashes],
-      es => TokenHashes(es.head)),
-    SqlFunction("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
-    SqlFunction("normalize_text", classOf[NormalizeText],
-      es => NormalizeText(es.head)),
-    SqlFunction("strip_markup", classOf[StripMarkup],
-      es => StripMarkup(es.head)),
-    SqlFunction("script_profile", classOf[ScriptProfile],
-      es => ScriptProfile(es.head)),
-    SqlFunction("gram_repetition", classOf[GramRepetition],
-      es => GramRepetition(es.head, litInt(es(1)))),
-    SqlFunction("word_shingle_hashes", classOf[WordShingleHashes],
-      es => WordShingleHashes(es.head, litInt(es(1)))),
-    SqlFunction("minhash_sig", classOf[MinHashSig],
-      es => MinHashSig(es.head, litInt(es(1)), litInt(es(2)))),
-    SqlFunction("srp_sketch64", classOf[SrpSketch64],
-      es => SrpSketch64(es.head, litInt(es(1)))),
-    SqlFunction("top_k", classOf[TopKAgg],
-      es => TopKAgg(es(0), es(1), litInt(es(2)))),
-    SqlFunction("vec_dot", classOf[VecDot],
-      es => VecDot(toAD(es(0)), toAD(es(1)))),
-    SqlFunction("vec_cosine", classOf[VecCosine],
-      es => VecCosine(toAD(es(0)), toAD(es(1)))),
-    SqlFunction("rolling_hash31", classOf[RollingHash31],
-      es => RollingHash31(es.head)),
-    SqlFunction("long_eq_frac", classOf[LongEqFrac],
-      es => LongEqFrac(es(0), es(1))),
-    SqlFunction("vec_sqdist", classOf[VecSqDist],
-      es => VecSqDist(toAD(es(0)), toAD(es(1)))),
-    SqlFunction("zorder2", classOf[ZOrder2],
-      es => ZOrder2(toL(es(0)), toL(es(1)), litInt(es(2)))),
-    SqlFunction("ahash64", classOf[AHash64],
-      es => AHash64(es.head, litInt(es(1)), litInt(es(2)))),
-    SqlFunction("dhash64", classOf[DHash64],
-      es => DHash64(es.head, litInt(es(1)), litInt(es(2)))),
-    SqlFunction("energy_profile64", classOf[EnergyProfile64],
-      es => EnergyProfile64(es.head)))
+  /** graft's SQL surface, one entry per name: every kernel with a SQL
+    * name (its integer parameters are trailing literal arguments), and
+    * `top_k`. [[GraftExtensions]] injects every entry into each session
+    * built with it. */
+  val sqlFunctions: Seq[SqlFunction] = kernels.filter(_.sql).map { k =>
+    SqlFunction(k.name, classOf[Kernel], es => call(k.name,
+      es.take(k.args.length), es.drop(k.args.length).map(litInt)))
+  } :+ SqlFunction("top_k", classOf[TopKAgg],
+    es => TopKAgg(es(0), es(1), litInt(es(2))))
 
   /** Integer literal argument of a SQL call (k, numHashes, dim …). */
   private def litInt(e: Expression): Int = e match {

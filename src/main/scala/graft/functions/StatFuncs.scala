@@ -148,7 +148,7 @@ object StatFuncs {
   // -------------------- Column functions --------------------
 
   /** erfc as a column function — a codegen-native Catalyst Expression
-    * (graft.functions.Expressions.Erfc), not a UDF. */
+    * (graft.functions.Expressions.erfc), not a UDF. */
   def erfcCol(c: Column): Column = Expressions.erfc(c.cast("double"))
 
   /** log-pdf of N(mu, sigma) at x — pure column arithmetic (codegen'd). */

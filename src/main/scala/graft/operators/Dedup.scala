@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     shuffles of the full table + a join, and a bucket of n docs expands
   *     to n(n-1)/2 pairs exactly once;
   *   - shingles/tokens are hashed with `poly_hash64` (a codegen Catalyst
-  *     expression, graft.functions.Expressions.PolyHash64) whose
+  *     expression, graft.functions.Expressions.polyHash64) whose
   *     recurrence is replayable in other engines — the DuckDB oracles
   *     recompute the identical MinHash/SimHash families, so even the LSH
   *     ops are exact-checked, not rows-only;
@@ -38,7 +38,7 @@ object Dedup {
   /** Distinct word-k-gram shingle HASHES per document as a row-local
     * array column `sh_hs`: the zero-shuffle base for Jaccard/MinHash.
     * Documents shorter than k words get an empty array. One codegen
-    * kernel call per row (Expressions.WordShingleHashes) — the
+    * kernel call per row (Expressions.wordShingleHashes) — the
     * split/slice/concat higher-order-function formulation is interpreted
     * per shingle and measured ~10× slower on the documents corpus. */
   def withShingleHashes(df: DataFrame, textCol: String,
@@ -847,7 +847,7 @@ object Dedup {
     graft.functions.HashFuncs.mixConstants(numHashes)
 
   /** MinHash signature as a row-local array column `sig` — NO shuffle and
-    * ONE codegen kernel call per row (Expressions.MinHashSig): shingle
+    * ONE codegen kernel call per row (Expressions.minHashSig): shingle
     * hashing, the affine family, and the per-function mins all happen in
     * a single pass over the document bytes. Docs with no shingles (< k
     * words) are dropped (null signature). */
@@ -924,7 +924,7 @@ object Dedup {
   }
 
   /** 64-bit SimHash per document, entirely row-local and one codegen
-    * kernel call (Expressions.SimHash64): bit j is set when more than
+    * kernel call (Expressions.simHash64): bit j is set when more than
     * half of the token OCCURRENCES have bit j set in their poly_hash64
     * (the ±1 majority vote; frequency weighting over distinct tokens is
     * identical to counting occurrences). */

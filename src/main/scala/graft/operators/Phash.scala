@@ -44,7 +44,7 @@ object Phash {
     * 64 cells have equal area. Levels ≤ 2^24 keep every product far
     * from BIGINT range (total ≤ n·2^24, ×64 ≤ 2^36+log2 n).
     *
-    * Runs as the codegen kernel [[graft.functions.Expressions.AHash64]]
+    * Runs as the codegen kernel [[graft.functions.Expressions.aHash64]]
     * (one tight pooling loop in generated code); [[aHash64Hof]] is the
     * same math as pure SQL higher-order functions — the formulation the
     * q155 DuckDB oracle replays relationally — and PhashSpec asserts
@@ -224,7 +224,7 @@ object Phash {
     * Output: (media_id, n_samples, fingerprint).
     *
     * The profile runs as the codegen kernel
-    * [[graft.functions.Expressions.EnergyProfile64]] (one pass, no
+    * [[graft.functions.Expressions.energyProfile64]] (one pass, no
     * per-segment array copies); [[energyProfile64Hof]] keeps the same
     * math as pure SQL HOFs — the formulation the q162 DuckDB oracle
     * replays relationally — and PhashSpec asserts kernel ≡ HOF

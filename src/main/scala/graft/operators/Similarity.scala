@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * cluster-pruned variant as the scale path.
   *
   * All vector math runs as codegen kernel expressions
-  * ([[graft.functions.Expressions.VecDot]]/VecCosine) — no UDFs, no
+  * ([[graft.functions.Expressions.vecDot]]/vecCosine) — no UDFs, no
   * per-element interpreted lambdas. Accumulation is a sequential left
   * fold, matching the order a scalar loop would use (deterministic per
   * row and bit-identical to the declarative HOF formulation).
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Sequential dot product of two double-array columns — a codegen
-    * kernel ([[graft.functions.Expressions.VecDot]]): Spark's
+    * kernel ([[graft.functions.Expressions.vecDot]]): Spark's
     * aggregate/zip_with HOFs interpret their lambda per ELEMENT, which
     * puts a virtual dispatch inside the innermost dim-loop of every
     * similarity scan; the kernel is one tight loop with the identical

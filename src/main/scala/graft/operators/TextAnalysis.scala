@@ -80,7 +80,7 @@ object TextAnalysis {
   /** Rolling-hash fingerprint (Rabin-Karp base-31 mod 1e9+7 over the whole
     * text — exact-dup key that is cheap to compute incrementally at scale;
     * the modulus keeps the fold in range under ANSI arithmetic). One
-    * codegen byte loop (graft.functions.Expressions.RollingHash31) — the
+    * codegen byte loop (graft.functions.Expressions.rollingHash31) — the
     * per-character split + interpreted aggregate it replaces paid a
     * lambda dispatch per CHARACTER of the corpus. */
   def rollingHash(text: Column): Column =

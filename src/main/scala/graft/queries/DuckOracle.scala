@@ -3,7 +3,7 @@ package graft.queries
 import graft.operators.Dedup
 
 /** SQL-snippet generators that replay graft's portable hash families
-  * (graft.functions.Expressions.PolyHash64 and the MinHash affine family
+  * (graft.functions.Expressions.polyHash64 and the MinHash affine family
   * from Dedup.mixConstants) inside DuckDB, so the LSH / fingerprint
   * operators can be EXACT-oracle-checked instead of rows-only.
   *
@@ -12,7 +12,7 @@ import graft.operators.Dedup
   * 128-bit (UHUGEINT) mod 2^64 and converts to signed at the end —
   * bit-identical to the Java semantics. Inputs are ASCII (verified for
   * the driver's documents tables), so a per-character `ord` fold equals
-  * the UTF-8 byte fold PolyHash64 performs.
+  * the UTF-8 byte fold poly_hash64 performs.
   */
 object DuckOracle {
 

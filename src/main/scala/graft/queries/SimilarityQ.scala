@@ -782,7 +782,7 @@ object SimilarityQ {
     * segments are empty) with amplitudes k/256 — exact in binary, so
     * trunc(|x|·2^24) is pure integer arithmetic (|k|·2^16) the oracle
     * computes without ever touching a float. The
-    * [[graft.functions.Expressions.EnergyProfile64]] codegen kernel
+    * [[graft.functions.Expressions.energyProfile64]] codegen kernel
     * produces the 64-segment quantized profile, aHash64 the 8×8
     * compare-to-mean fingerprint; output is one row per (signal,
     * segment) carrying the profile level AND that fingerprint bit, so
@@ -846,7 +846,7 @@ object SimilarityQ {
     * re-rank to top-10. Both stages tie-break by vec_id, the cosine is
     * the sequential double fold in BOTH engines (DuckDB's
     * list_cosine_similarity over CAST(... AS DOUBLE[]) is bit-equal to
-    * the VecCosine kernel — measured, not assumed), so ranks AND the
+    * the vec_cosine kernel — measured, not assumed), so ranks AND the
     * 6-rounded scores hash-match. The oracle replays the coarse
     * window, the candidate cut and the re-rank window relationally. */
   val q169 = Q(

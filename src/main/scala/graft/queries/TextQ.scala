@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * fingerprinting, n-gram Jaccard near-dup pairs, MinHash-LSH, SimHash,
   * and rolling-hash fingerprints — ALL exact-oracle-checked. The hash
   * families are built on poly_hash64 (a portable Rabin-Karp recurrence;
-  * graft.functions.Expressions.PolyHash64) so DuckDB replays them
+  * graft.functions.Expressions.polyHash64) so DuckDB replays them
   * bit-for-bit via DuckOracle's unsigned-128 mod-2^64 folds.
   */
 object TextQ {
@@ -1707,7 +1707,7 @@ object TextQ {
       FROM r ORDER BY doc_id"""))
 
   /** Unicode text normalization — the pre-tokenizer hygiene pass every
-    * production corpus runs ([[graft.functions.Expressions.NormalizeText]]):
+    * production corpus runs ([[graft.functions.Expressions.normalizeText]]):
     * NFC composition, control/zero-width/BOM strip, space-run collapse,
     * trim — one codegen kernel, bit-identical at any parallelism. The
     * fixture plants combining accents (NFC must compose), a SOH control
@@ -1763,7 +1763,7 @@ object TextQ {
     * exists for: byte-DIFFERENT but canonically-equal copies (composed
     * vs decomposed accents, zero-width joiners, ragged spacing) must
     * collapse to one hash AFTER [[graft.functions.Expressions
-    * .NormalizeText]] while raw md5 keeps them apart. The fixture
+    * .normalizeText]] while raw md5 keeps them apart. The fixture
     * plants one composed and one decomposed variant of every document;
     * the output proves each pair lands in ONE group of exactly two
     * copies with the composed variant's id kept (min id), and carries
@@ -1813,7 +1813,7 @@ object TextQ {
       ORDER BY keep_id"""))
 
   /** Markup → text extraction ([[graft.functions.Expressions
-    * .StripMarkup]], SQL `strip_markup`) — the pass a web corpus runs
+    * .stripMarkup]], SQL `strip_markup`) — the pass a web corpus runs
     * BEFORE [[q157]]'s normalization. The fixture wraps every document
     * in markup exercising each stage: a script block whose CONTENT
     * must vanish (including a bare `1 < 2` and a newline, behind an
@@ -1881,7 +1881,7 @@ object TextQ {
       FROM st ORDER BY doc_id"""))
 
   /** Unicode-script census ([[graft.functions.Expressions
-    * .ScriptProfile]]) — the script-mix signal a multilingual pipeline
+    * .scriptProfile]]) — the script-mix signal a multilingual pipeline
     * pairs with language ID (q29): lang-ID n-gram models mislabel
     * script-mixed documents (spam, spoofed homoglyphs, boilerplate
     * concatenations), so the per-script codepoint counts gate them

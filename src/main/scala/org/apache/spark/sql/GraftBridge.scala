@@ -11,6 +11,17 @@ object GraftBridge {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** Spark's `ExpectsInputTypes` over plain types (its
+    * `AbstractDataType` is `private[sql]`): argument i accepts any type
+    * in `accepted(i)`, nullability ignored; no implicit cast. */
+  trait AcceptsTypes extends catalyst.expressions.ExpectsInputTypes {
+    def accepted: Seq[Seq[types.DataType]]
+    override def inputTypes: Seq[types.AbstractDataType] = accepted.map {
+      case Seq(t) => t
+      case ts => types.TypeCollection(ts: _*)
+    }
+  }
+
   /** Re-enter the DataFrame world from an `InternalRow` RDD produced by
     * `df.queryExecution.toRdd` (used by operators that must pin ONE
     * physical plan instance across multiple jobs — see

@@ -360,7 +360,8 @@ class PlanSpec extends SparkSpec {
       .queryExecution.optimizedPlan
     val kernels = opt.collect { case node =>
       node.expressions.map(_.collect {
-        case e: graft.functions.Expressions.EnergyProfile64 => e
+        case e: graft.functions.Expressions.Kernel
+            if e.prettyName == "energy_profile64" => e
       }.size).sum
     }.sum
     assert(kernels == 1, opt.treeString)

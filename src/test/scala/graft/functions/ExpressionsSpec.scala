@@ -2,8 +2,10 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.commons.math3.special.Erf
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class ExpressionsSpec extends SparkSpec {
   import spark.implicits._
@@ -242,5 +244,155 @@ class ExpressionsSpec extends SparkSpec {
         (acc, c) => (acc * 31L + c) % 1000000007L).as("h")).collect()
     assert(r.nonEmpty)
     r.foreach(row => assert(row.getLong(0) === row.getLong(1)))
+  }
+
+  /** Every kernel's Column helper, with the parity frame's columns it
+    * takes: (kernel name, argument columns, call). zorder2 runs at both
+    * `bits` bounds and energy_profile64 over both element types. */
+  private val kernelCalls: Seq[(String, Seq[String], Seq[Column] => Column)] =
+    Seq(
+      ("erfc", Seq("x"), a => Expressions.erfc(a(0))),
+      ("norm_log_sf", Seq("x"), a => Expressions.normLogSf(a(0))),
+      ("norm_inv", Seq("x"), a => Expressions.normInv(a(0))),
+      ("t_two_sided_p", Seq("d", "dof"),
+        a => Expressions.tTwoSidedP(a(0), a(1))),
+      ("ecdf_count", Seq("sorted", "d"),
+        a => Expressions.ecdfCount(a(0), a(1))),
+      ("poly_hash64", Seq("s"), a => Expressions.polyHash64(a(0))),
+      ("token_hashes", Seq("s"), a => Expressions.tokenHashes(a(0))),
+      ("word_shingle_hashes", Seq("s"),
+        a => Expressions.wordShingleHashes(a(0), 2)),
+      ("word_shingle_hashes_at", Seq("s"),
+        a => Expressions.wordShingleHashesAt(a(0), 2)),
+      ("gram_repetition", Seq("s"), a => Expressions.gramRepetition(a(0), 2)),
+      ("normalize_text", Seq("s"), a => Expressions.normalizeText(a(0))),
+      ("strip_markup", Seq("s"), a => Expressions.stripMarkup(a(0))),
+      ("script_profile", Seq("s"), a => Expressions.scriptProfile(a(0))),
+      ("simhash64", Seq("s"), a => Expressions.simHash64(a(0))),
+      ("minhash_sig", Seq("s"), a => Expressions.minHashSig(a(0), 2, 8)),
+      ("rolling_hash31", Seq("s"), a => Expressions.rollingHash31(a(0))),
+      ("srp_sketch64", Seq("va"), a => Expressions.srpSketch64(a(0), 4)),
+      ("vec_dot", Seq("va", "vb"), a => Expressions.vecDot(a(0), a(1))),
+      ("vec_cosine", Seq("va", "vb"), a => Expressions.vecCosine(a(0), a(1))),
+      ("vec_sqdist", Seq("va", "vb"), a => Expressions.vecSqDist(a(0), a(1))),
+      ("long_eq_frac", Seq("la", "lb"),
+        a => Expressions.longEqFrac(a(0), a(1))),
+      ("sorted_intersect_count", Seq("la", "lb"),
+        a => Expressions.sortedIntersectCount(a(0), a(1))),
+      ("zorder2", Seq("za", "zb"), a => Expressions.zorder2(a(0), a(1), 1)),
+      ("zorder2", Seq("za", "zb"), a => Expressions.zorder2(a(0), a(1), 32)),
+      ("ahash64", Seq("lv64"), a => Expressions.aHash64(a(0), 8, 8)),
+      ("dhash64", Seq("lv72"), a => Expressions.dHash64(a(0), 9, 8)),
+      ("energy_profile64", Seq("f"), a => Expressions.energyProfile64(a(0))),
+      ("energy_profile64", Seq("va"), a => Expressions.energyProfile64(a(0))))
+
+  test("every kernel: codegen and interpreted rows are identical, " +
+      "null in any argument gives null") {
+    assert(kernelCalls.map(_._1).toSet ==
+      Expressions.kernels.map(_.name).toSet)
+    val schema = StructType(Seq(
+      StructField("row", IntegerType, false),
+      StructField("x", DoubleType), StructField("d", DoubleType),
+      StructField("dof", IntegerType),
+      StructField("s", StringType),
+      StructField("va", ArrayType(DoubleType)),
+      StructField("vb", ArrayType(DoubleType)),
+      StructField("sorted", ArrayType(DoubleType)),
+      StructField("la", ArrayType(LongType)),
+      StructField("lb", ArrayType(LongType)),
+      StructField("lv64", ArrayType(LongType)),
+      StructField("lv72", ArrayType(LongType)),
+      StructField("f", ArrayType(FloatType)),
+      StructField("za", LongType), StructField("zb", LongType)))
+    // x feeds erfc, norm_log_sf and norm_inv, d the others: x has no
+    // NaN because StatFuncs.erfc(NaN) throws (erfcx's require)
+    def longs(n: Int)(f: Int => Long): Seq[Long] = (0 until n).map(f)
+    val rows = Seq(
+      Row(0, 0.5, 0.5, 5, "the cat the cat sat", Seq(1.0, -2.0, 3.0),
+        Seq(0.5, null, 2.0), Seq(-1.0, 0.0, 2.5, 2.5), Seq(1L, 3L, 5L, 7L),
+        Seq(3L, 4L, 5L), longs(64)(i => i * 37 % 101),
+        longs(72)(i => i * 53 % 97),
+        (0 until 100).map(i => math.sin(i).toFloat), 5L, 9L),
+      // empty string and arrays, NaN, the smallest dof, the deep tail
+      Row(1, -40.0, Double.NaN, 1, "", Seq(), Seq(), Seq(), Seq(), Seq(),
+        longs(64)(_ => 0L), longs(72)(_ => 7L), Seq(), -1L, 0L),
+      Row(2, null, null, null, null, null, null, null, null, null, null,
+        null, null, null, null),
+      // markup, combining marks, scripts, a surrogate pair; NaN elements
+      // (NaN sorts last); the long extremes; fewer samples than segments
+      Row(3, -2.0, -2.0, 30, "<b>Cafe\u0301</b>  \u041f\u0440\u0438 " +
+        "\u4f60\u597d \ud83d\ude00 a&amp;b", Seq(Double.NaN, 1.0),
+        Seq(1.0, Double.NaN), Seq(1.0, Double.NaN),
+        Seq(Long.MinValue, 0L), Seq(0L), longs(64)(i => i.toLong << 18),
+        longs(72)(i => (71 - i).toLong << 18), Seq(0.1f, -0.2f, 0.3f),
+        Long.MaxValue, Long.MinValue),
+      // infinity, dof 0, controls and zero-widths, signed zeros, a
+      // null in one argument only
+      Row(4, Double.PositiveInfinity, Double.PositiveInfinity, 0,
+        "a  b\u0000c\u200bd",
+        Seq(0.0, -0.0), Seq(-0.0, 0.0), Seq(-0.0, 0.0), Seq(2L, 2L, 3L),
+        Seq(2L, 3L, 3L), null, null, null, 0L, null))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema).cache()
+    // an always-null input the optimizer cannot fold: a constant null
+    // would be evaluated at planning time instead of in the plan
+    def nulled(c: String): Column = when(col("row") < 0, col(c))
+    val outs = kernelCalls.zipWithIndex.flatMap { case ((_, args, call), i) =>
+      (s"k$i" -> call(args.map(col))) +: args.indices.map { p =>
+        s"n${i}_$p" -> call(args.zipWithIndex.map { case (a, j) =>
+          if (j == p) nulled(a) else col(a) })
+      }
+    }
+    def under(confs: (String, String)*): Seq[Row] = {
+      val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try df.select(col("row") +: outs.map { case (n, c) => c.as(n) }: _*)
+        .collect().sortBy(_.getInt(0)).toSeq
+      finally old.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    try {
+      val gen = under("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false")
+      val interp = under("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+      assert(gen.length == rows.length)
+      // toString keeps NaN == NaN and tells -0.0 from 0.0
+      gen.zip(interp).foreach { case (g, n) =>
+        assert(g.toString == n.toString)
+      }
+      for (r <- gen; (n, _) <- outs if n.startsWith("n"))
+        assert(r.isNullAt(r.fieldIndex(n)), s"$n row ${r.getInt(0)}")
+      // the all-null row gives null in every kernel column
+      assert(gen(2).toSeq.tail.forall(_ == null))
+    } finally df.unpersist()
+    // result nullability: minhash_sig is nullable on a non-null input,
+    // the other kernels follow their inputs
+    val lits = spark.range(1).select(
+      Expressions.minHashSig(lit("a b"), 2, 4),
+      Expressions.polyHash64(lit("a")))
+    assert(lits.schema.map(_.nullable) == Seq(true, false))
+  }
+
+  test("SQL surface: exactly the 23 names; a wrong-typed argument fails " +
+      "analysis naming the function") {
+    val names = Seq("ahash64", "dhash64", "energy_profile64", "erfc",
+      "gram_repetition", "long_eq_frac", "minhash_sig", "norm_inv",
+      "norm_log_sf", "normalize_text", "poly_hash64", "rolling_hash31",
+      "script_profile", "simhash64", "srp_sketch64", "strip_markup",
+      "token_hashes", "top_k", "vec_cosine", "vec_dot", "vec_sqdist",
+      "word_shingle_hashes", "zorder2")
+    assert(Expressions.sqlFunctions.map(_.name).sorted == names)
+    Seq("ecdf_count", "t_two_sided_p", "word_shingle_hashes_at",
+      "sorted_intersect_count").foreach(n =>
+      assert(!spark.catalog.functionExists(n), n))
+    Seq("poly_hash64" -> "poly_hash64(1L)",
+      "token_hashes" -> "token_hashes(1L)",
+      "ahash64" -> "ahash64(array(1, 2), 8, 8)",
+      "energy_profile64" -> "energy_profile64(array('a'))").foreach {
+      case (fn, call) =>
+        val e = intercept[AnalysisException](spark.sql(s"SELECT $call"))
+        assert(e.getMessage.contains(fn), e.getMessage)
+    }
   }
 }
