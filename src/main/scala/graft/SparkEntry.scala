@@ -26,7 +26,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (driver records a weaker rows-only check). Built once. */
+    * (driver records a weaker rows-only check). */
   val oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 }
